@@ -763,7 +763,7 @@ def drift_stream_job(args) -> None:
 def transform_job(args) -> None:
     """Serving-side scoring: assign bins/WoE to a FRESH slice from a saved
     ``model.json`` artifact (``fit-woe`` output) — no refit, no training
-    rescan, just the broadcast pandas-UDF lookup over one scan of the
+    rescan, just the compiled bin lookup over one scan of the
     input, written as an idempotent checkpoint stage. Detects single
     (``FittedBins``) vs per-group (``GroupedBins``) artifacts from the
     payload, mirroring ``drift``."""
@@ -809,8 +809,8 @@ def score_job(args) -> None:
     """Serve a saved ``scorecard.json`` at scale: total integer score per
     row, optionally per-feature points and top-k adverse-action reason
     codes, written as an idempotent checkpoint stage. No refit and no
-    shuffle — the card is kilobytes and ships inside the broadcast
-    pandas UDFs (:meth:`scorecard.Scorecard.transform`)."""
+    shuffle — the card is kilobytes, compiled into the scoring
+    expression (:meth:`scorecard.Scorecard.transform`)."""
     from .scorecard import Scorecard
 
     spark = _spark("mob-score")

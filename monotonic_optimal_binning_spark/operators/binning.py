@@ -8,8 +8,8 @@ Execution shape (SURVEY.md §3.1, BASELINE.json north_star):
           combine; raw rows never leave executors), then a bounded
           driver-side PAVA + statistical-merge pass over the collected k-row
           table (k = distinct x, or ≤ prebins via quantile pre-binning).
-  transform = broadcast cut-points + one Arrow-vectorized pandas UDF doing
-          ``np.searchsorted`` per batch (the reference's per-row
+  transform = cut-points compiled into one Catalyst expression with
+          ``np.searchsorted`` semantics, no Python worker (the reference's per-row
           ``Series.apply`` at /root/reference/src/MOBPY/binning/mob.py:468 is
           exactly the anti-pattern this replaces).
 
@@ -39,6 +39,7 @@ from ..core.pava import GroupStats, fit_pava
 from ..core.stats import woe_iv
 from ..exceptions import DataError, NotFittedError
 from ..functions.labels import bucket_labels
+from ..functions.lookup import dispatch, literal, name, serve_sql, tabulate
 
 _NUMERIC_SPARK_TYPES = (
     T.ByteType,
@@ -458,16 +459,21 @@ class FittedBins:
         with open(path) as f:
             return cls.from_dict(json.load(f))
 
-    def assign_batch(self, values: pd.Series, assign: str) -> pd.Series:
-        """Vectorized bin assignment for one Arrow batch."""
-        vals = values.to_numpy()
-        fvals = vals.astype(float, copy=False)
-        n_bins = len(self.rights)
-
+    def _bin_index(self, fvals: np.ndarray) -> np.ndarray:
+        """Bin of each float value: ``searchsorted`` over the right edges,
+        stepped back where a value falls left of its bin's left edge."""
         idx = np.searchsorted(self.rights, fvals, side="right")
-        np.minimum(idx, n_bins - 1, out=idx)
+        np.minimum(idx, len(self.rights) - 1, out=idx)
         fix = (idx > 0) & (fvals < self.lefts[idx])
         idx[fix] -= 1
+        return idx
+
+    def assign_batch(self, values: pd.Series, assign: str) -> pd.Series:
+        """Vectorized bin assignment of a pandas Series (the driver-side
+        twin of :meth:`transform`)."""
+        vals = values.to_numpy()
+        fvals = vals.astype(float, copy=False)
+        idx = self._bin_index(fvals)
 
         is_missing = pd.isna(values).to_numpy()
         if self.exclude_values:
@@ -476,18 +482,8 @@ class FittedBins:
         else:
             is_excluded = np.zeros(len(vals), dtype=bool)
 
-        if assign == "left":
-            out = self.lefts[idx].astype(float)
-            out[is_missing | is_excluded] = np.nan
-            return pd.Series(out)
-        if assign == "right":
-            out = self.rights[idx].astype(float)
-            out[is_missing | is_excluded] = np.nan
-            return pd.Series(out)
-        if assign == "woe":
-            if self.woes is None:
-                raise ValueError("assign='woe' requires binary target")
-            out = self.woes[idx].astype(float)
+        if assign != "interval":
+            out = self._mode_values(assign)[idx].astype(float)
             out[is_missing | is_excluded] = np.nan
             return pd.Series(out)
         # interval labels
@@ -505,37 +501,41 @@ class FittedBins:
             out[is_missing] = "Missing"
         return pd.Series(out)
 
-    #: numeric-assign codegen guard: a fitted model has <= max_bins bins
-    #: (single digits), but from_cuts can build arbitrarily many — past
-    #: this the when-chain's planning cost beats the Arrow round-trip it
-    #: saves and the pandas UDF path takes over
-    CODEGEN_MAX_BINS = 256
+    def _mode_values(self, assign: str) -> np.ndarray:
+        """Per-bin values of a numeric ``assign`` mode."""
+        if assign == "woe" and self.woes is None:
+            raise ValueError("assign='woe' requires binary target")
+        if assign not in ("left", "right", "woe"):
+            raise ValueError(f"Unknown assign mode: {assign}")
+        return {"left": self.lefts, "right": self.rights, "woe": self.woes}[assign]
 
-    def _numeric_assign_column(self, col: Column, assign: str) -> Column:
-        """Pure-JVM (whole-stage-codegen) equivalent of
-        :meth:`assign_batch` for the numeric modes ('woe'/'left'/
-        'right'): bin membership is the strict-< chain over the interior
-        right edges (identical to ``searchsorted(rights, x, 'right')``
-        for the contiguous bins every fit produces), missing (null/NaN)
-        and excluded inputs map to NaN exactly as the vectorized path
-        does. Keeping serving-side scoring out of Python removes the
-        ArrowEvalPython round-trip of every scored row (guide §4.1)."""
-        arr = {"woe": self.woes, "left": self.lefts, "right": self.rights}[
-            assign
-        ]
-        xd = col.cast("double")
-        expr: Column = F.lit(float(arr[-1]))
-        for i in range(len(self.rights) - 2, -1, -1):
-            expr = F.when(
-                xd < F.lit(float(self.rights[i])), F.lit(float(arr[i]))
-            ).otherwise(expr)
-        cond = col.isNull() | F.isnan(xd)
-        if self.exclude_values:
-            # assign_batch compares against float-cast excluded values;
-            # NaN never matches isin (comparison semantics), mirroring
-            # the ~is_missing mask there
-            cond = cond | xd.isin([float(v) for v in self.exclude_values])
-        return F.when(cond, F.lit(float("nan"))).otherwise(expr)
+    def lookup_sql(self, input_col: str, bin_values: Sequence, *, dtype: str = "double",
+                   missing: Any = None, excluded: Any = None) -> str:
+        """SQL of ``bin_values[bin of input_col]``
+        (:func:`..functions.lookup.serve_sql`), each step's bin read off
+        :meth:`assign_batch`'s own index. NULL/NaN inputs give
+        ``missing``; excluded ones (matched as floats, like
+        ``assign_batch``'s ``np.isin``) give ``excluded``, a value or a
+        function of the excluded float returning SQL."""
+        edges = np.unique(np.concatenate([self.rights[:-1], self.lefts[1:]]))
+        bins = tabulate(self._bin_index, edges)
+        ex = excluded if callable(excluded) else lambda _: literal(excluded, dtype)
+        return serve_sql(
+            input_col, edges, [bin_values[i] for i in bins], dtype=dtype,
+            missing=literal(missing, dtype),
+            special=[(float(v), ex(float(v))) for v in self.exclude_values or ()],
+        )
+
+    def assign_sql(self, input_col: str, assign: str, in_type=None) -> str:
+        """SQL of one ``assign`` mode (see :meth:`transform`); the input's
+        Spark type ``in_type`` sets how 'interval' prints
+        ``Excluded:{v}``."""
+        if assign != "interval":
+            return self.lookup_sql(input_col, self._mode_values(assign))
+        return self.lookup_sql(
+            input_col, self.labels, dtype="string", missing="Missing",
+            excluded=lambda v: _excluded_label(input_col, v, in_type),
+        )
 
     def transform(
         self,
@@ -544,41 +544,37 @@ class FittedBins:
         input_col: Optional[str] = None,
         output_col: Optional[str] = None,
     ) -> DataFrame:
-        """Serving-side broadcast lookup: score a DataFrame straight from
-        the artifact (no binner / fit state required — this is what a
+        """Serving-side lookup: score a DataFrame straight from the
+        artifact (no binner / fit state required — this is what a
         ``load_json``'d model does in production). ``assign``:
-        'interval' (label), 'left', 'right', or 'woe'.
-
-        Numeric modes ('woe'/'left'/'right') compile the bin edges and
-        values into a whole-stage-codegen when-chain — no Python in the
-        scoring path (values byte-identical to the vectorized
-        :meth:`assign_batch`; pinned by test). 'interval' (string
-        labels with the reference's ``Excluded:{val}`` raw-value
-        formatting) stays on the Arrow path; the artifact travels inside
-        the serialized pandas UDF (kilobytes)."""
-        if assign == "woe" and not self.is_binary:
-            raise ValueError("assign='woe' requires binary target")
-        if assign not in ("interval", "left", "right", "woe"):
-            raise ValueError(f"Unknown assign mode: {assign}")
-
+        'interval' (label), 'left', 'right', or 'woe'. Compiled, no Python
+        worker; equals :meth:`assign_batch` with NaN served as NULL."""
         input_col = input_col or self.x
         output_col = output_col or f"{input_col}_{assign}"
-        if (
-            assign != "interval"
-            and len(self.rights) <= self.CODEGEN_MAX_BINS
-        ):
-            return df.withColumn(
-                output_col,
-                self._numeric_assign_column(F.col(input_col), assign),
-            )
-        ret_type = "string" if assign == "interval" else "double"
-        model = self
+        in_type = None
+        if assign == "interval" and self.exclude_values:
+            in_type = df.select(input_col).schema[0].dataType
+        return df.withColumn(
+            output_col, F.expr(self.assign_sql(input_col, assign, in_type))
+        )
 
-        @F.pandas_udf(ret_type)
-        def _assign(values: pd.Series) -> pd.Series:
-            return model.assign_batch(values, assign)
 
-        return df.withColumn(output_col, _assign(F.col(input_col)))
+def _excluded_label(input_col: str, v: float, in_type) -> str:
+    """SQL of ``f"Excluded:{raw}"`` as :meth:`FittedBins.assign_batch`
+    prints the raw input that matched excluded float ``v``: the column's
+    numpy dtype sets the text (``7`` for ints, ``1e-05`` for doubles), not
+    Spark's double-to-string cast (``1.0E-5``). Integral and decimal
+    inputs print exactly through Spark's cast; floats from a driver-side
+    literal, with a matched zero's sign read off the row."""
+    x = name(input_col)
+    if isinstance(in_type, (T.IntegralType, T.DecimalType)):
+        return f"concat('Excluded:', CAST({x} AS STRING))"
+    if isinstance(in_type, T.BooleanType):
+        return literal(f"Excluded:{bool(v)}")
+    if v == 0.0:
+        return f"IF(startswith(CAST({x} AS STRING), '-'), 'Excluded:-0.0', 'Excluded:0.0')"
+    fmt = np.float32 if isinstance(in_type, T.FloatType) else np.float64
+    return literal(f"Excluded:{fmt(v)}")
 
 
 #: distinguishes "no frozen bucketing supplied" from "frozen EXACT
@@ -1582,7 +1578,8 @@ class SparkMonotonicBinner:
         input_col: Optional[str] = None,
         output_col: Optional[str] = None,
     ) -> DataFrame:
-        """Map a raw column to bin assignments via a broadcast pandas UDF.
+        """Map a raw column to bin assignments (a compiled lookup, see
+        :meth:`FittedBins.transform`).
 
         assign: 'interval' (label), 'left', 'right', or 'woe'.
         Delegates to :meth:`FittedBins.transform` — identical to scoring
@@ -1667,59 +1664,24 @@ class GroupedBins:
         group_col: Optional[str] = None,
         output_col: Optional[str] = None,
     ) -> DataFrame:
-        """Vectorized per-group bin lookup in ONE pandas UDF pass.
-
-        The {group -> cut-point arrays} dict is closure-captured (broadcast
-        with the serialized UDF — kilobytes); each Arrow batch is split by
-        group and searchsorted per sub-batch. No join, no per-group scans.
-        """
+        """Per-group bin lookup as one compiled expression: equality on the
+        group key picks the group's :meth:`FittedBins.assign_sql`. No join,
+        no per-group scans, no Python. Unseen and NULL/NaN group keys, and
+        non-binary groups under 'woe', yield NULL."""
         input_col = input_col or self.x
         group_col = group_col or self.group_col
         output_col = output_col or f"{input_col}_{assign}"
-        ret_type = "string" if assign == "interval" else "double"
-        models = self.models
-
-        # numeric modes with a bounded total chain size compile to a pure
-        # whole-stage-codegen group dispatch — no Python in the scoring
-        # path (guide §4.1). Semantics mirrored from the UDF exactly:
-        # unseen groups, null/NaN group keys (pandas groupby drops them)
-        # and non-binary groups under 'woe' all yield NaN.
-        total_bins = sum(len(m.rights) for m in models.values())
-        if (
-            assign != "interval"
-            and len(models) <= 64
-            and total_bins <= FittedBins.CODEGEN_MAX_BINS
-        ):
-            gcol = F.col(group_col)
-            vcol = F.col(input_col)
-            expr = F.lit(float("nan"))
-            for g, m in sorted(models.items(), key=lambda kv: str(kv[0])):
-                if g is None or (isinstance(g, float) and math.isnan(g)):
-                    continue  # groupby-dropped keys score NaN in the UDF
-                if assign == "woe" and m.woes is None:
-                    continue  # non-binary group: WoE undefined -> NaN
-                expr = F.when(
-                    gcol == F.lit(g), m._numeric_assign_column(vcol, assign)
-                ).otherwise(expr)
-            return df.withColumn(output_col, expr)
-
-        @F.pandas_udf(ret_type)
-        def _assign(groups: pd.Series, values: pd.Series) -> pd.Series:
-            out = pd.Series(
-                np.nan if ret_type == "double" else None,
-                index=values.index,
-                dtype="float64" if ret_type == "double" else "object",
-            )
-            for g, idx in values.groupby(groups, sort=False).groups.items():
-                model = models.get(g)
-                if model is None:
-                    continue
-                if assign == "woe" and model.woes is None:
-                    continue  # non-binary group: WoE undefined -> NaN
-                out.loc[idx] = model.assign_batch(values.loc[idx], assign).values
-            return out
-
-        return df.withColumn(output_col, _assign(F.col(group_col), F.col(input_col)))
+        in_type = None
+        if assign == "interval" and any(m.exclude_values for m in self.models.values()):
+            in_type = df.select(input_col).schema[0].dataType
+        branches = [
+            (g, m.assign_sql(input_col, assign, in_type))
+            for g, m in sorted(self.models.items(), key=lambda kv: str(kv[0]))
+            # non-binary group: WoE undefined -> NULL
+            if not (assign == "woe" and m.woes is None)
+        ]
+        dtype = "string" if assign == "interval" else "double"
+        return df.withColumn(output_col, F.expr(dispatch(name(group_col), branches, dtype)))
 
 
 def fit_binners_per_group(

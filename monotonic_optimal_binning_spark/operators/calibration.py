@@ -10,7 +10,7 @@ score mean what it says. Two standard tools:
   pool-adjacent-violators pass runs driver-side on the k collected rows
   (:mod:`..core.pava` — the same kernel the monotone binner uses, cited
   to /root/reference/src/MOBPY/core/pava.py:358-406), and serving is a
-  broadcast searchsorted pandas UDF.  Like the binner, a cheap
+  compiled step-function lookup.  Like the binner, a cheap
   ``approx_count_distinct`` probe keeps the driver collect bounded:
   high-cardinality raw scores are quantile-prebinned first.
 
@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..core.pava import GroupStats, fit_pava
+from ..functions.lookup import dispatch, name, serve_sql, step_sql, tabulate
 from .evaluation import _bucketize
 
 __all__ = [
@@ -46,8 +47,8 @@ __all__ = [
 
 @dataclass
 class IsotonicCalibration:
-    """Driver-side fitted step function (kilobytes; ships inside the
-    serving UDF).
+    """Driver-side fitted step function (kilobytes; compiled into the
+    serving expression).
 
     ``bounds`` are the k-1 INNER block boundaries in fit-key space
     (half-open blocks, the core PAVA convention): a key equal to a
@@ -80,21 +81,25 @@ class IsotonicCalibration:
         out[nan_mask] = np.nan  # no score, no calibrated score
         return pd.Series(out)
 
+    def lookup_sql(self, input_col: str) -> str:
+        """:meth:`predict_batch` as one step function over the raw score:
+        its only breakpoints are the prebin cuts (or, unprebinned, the
+        block bounds), so the prebin mapping and the block lookup compose
+        on the driver into one table. NULL/NaN scores give NULL."""
+        edges = self.cuts if self.cuts is not None and len(self.cuts) else self.bounds
+        steps = tabulate(lambda v: self.predict_batch(pd.Series(v)).to_numpy(), edges)
+        return serve_sql(input_col, edges, steps)
+
     def transform(
         self,
         df: DataFrame,
         input_col: Optional[str] = None,
         output_col: Optional[str] = None,
     ) -> DataFrame:
+        """Append :meth:`predict_batch`'s score (NaN as NULL), compiled."""
         input_col = input_col or self.score_col
         output_col = output_col or f"{input_col}_calibrated"
-        model = self
-
-        @F.pandas_udf("double")
-        def _cal(values: pd.Series) -> pd.Series:
-            return model.predict_batch(values)
-
-        return df.withColumn(output_col, _cal(F.col(input_col)))
+        return df.withColumn(output_col, F.expr(self.lookup_sql(input_col)))
 
     def to_dict(self) -> dict:
         return {
@@ -178,18 +183,9 @@ def _apply_prebins(base: DataFrame, prebins, prebin_relative_error: float):
             # raw->key mapping; the top open bucket gets a finite
             # sentinel strictly above every cut
             sentinel = cuts[-1] + max(1.0, abs(cuts[-1]))
-            expr = None
-            for c in cuts:
-                cond = F.col("__s") < F.lit(float(c))
-                expr = (
-                    F.when(cond, F.lit(float(c)))
-                    if expr is None
-                    else expr.when(cond, F.lit(float(c)))
-                )
             keep = [c for c in base.columns if c != "__s"]
-            base = base.select(
-                expr.otherwise(F.lit(float(sentinel))).alias("__s"), *keep
-            )
+            rebin = step_sql("`__s`", cuts, cuts + [sentinel])
+            base = base.select(F.expr(rebin).alias("__s"), *keep)
             cuts_arr = np.asarray(cuts, dtype=float)
     return base, cuts_arr, sentinel
 
@@ -310,7 +306,7 @@ def _solve_iso(
 class GroupedIsotonicCalibration:
     """Per-group fitted isotonic step functions (one
     :class:`IsotonicCalibration` per group value; kilobytes per group,
-    ships inside the serving UDF). Unknown/NULL groups calibrate to NULL
+    compiled into one serving expression). Unknown/NULL groups calibrate to NULL
     — at serving time an unseen segment has no fitted curve, and a loud
     NaN beats a silently-global answer."""
 
@@ -325,24 +321,14 @@ class GroupedIsotonicCalibration:
         output_col: Optional[str] = None,
         group_col: Optional[str] = None,
     ) -> DataFrame:
+        """Append each group's compiled calibrated score (equality on the
+        group key picks the group's :meth:`IsotonicCalibration.lookup_sql`)."""
         input_col = input_col or self.score_col
         output_col = output_col or f"{input_col}_calibrated"
         gcol = group_col or self.group_col
-        models = self.models
-
-        @F.pandas_udf("double")
-        def _cal(g: pd.Series, sc: pd.Series) -> pd.Series:
-            out = pd.Series(np.nan, index=sc.index, dtype=float)
-            for gv, idx in g.groupby(g, dropna=True).groups.items():
-                m = models.get(gv)
-                if m is not None:
-                    out.loc[idx] = m.predict_batch(
-                        sc.loc[idx]
-                    ).to_numpy()
-            return out
-
+        branches = [(gv, m.lookup_sql(input_col)) for gv, m in self.models.items()]
         return df.withColumn(
-            output_col, _cal(F.col(gcol), F.col(input_col))
+            output_col, F.expr(dispatch(name(gcol), branches))
         )
 
     def to_dict(self) -> dict:

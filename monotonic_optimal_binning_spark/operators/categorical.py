@@ -21,12 +21,11 @@ and bounded at any cardinality:
 * WoE/IV arithmetic is :func:`core.stats.woe_iv` (same smoothing/clip
   semantics as the numeric path, /root/reference/src/MOBPY/core/utils.py:152-237).
 
-Transform is a broadcast dict + vectorized pandas-UDF lookup (the
-artifact travels inside the serialized UDF, kilobytes for 10k
-categories): unseen categories at serving time fall back to the
-``__other__`` WoE — the right default for production scoring, where a
-brand-new category is exactly "a category too rare to have been in the
-top-N at training time". ``CatBins`` round-trips through strict JSON
+Transform is a broadcast hash join on a (category, WoE) table (no
+Python worker, one hash probe per row): unseen categories at serving time fall back to
+the ``__other__`` WoE — the right default for production scoring, where
+a brand-new category is exactly "a category too rare to have been in
+the top-N at training time". ``CatBins`` round-trips through strict JSON
 like :class:`operators.binning.FittedBins`.
 """
 
@@ -40,6 +39,8 @@ from typing import Any, Dict, List, Optional
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..functions.lookup import literal, name
 
 OTHER = "__other__"
 MISSING = "Missing"
@@ -132,25 +133,35 @@ class CatBins:
         input_col: Optional[str] = None,
         output_col: Optional[str] = None,
     ) -> DataFrame:
-        """Broadcast WoE lookup: one Arrow-vectorized stage, no shuffle.
+        """WoE lookup by a broadcast hash join on a (category, WoE)
+        table: no shuffle, no Python, one hash probe per row at any
+        category count. The input is read as a string, as the fit reads it.
 
         Null → the ``Missing`` WoE; a category never seen at fit time →
         the ``__other__`` WoE (documented fallback semantics).
         """
         input_col = input_col or self.x
         output_col = output_col or f"{input_col}_woe"
-        woes = dict(self.woes)
-        other = woes.get(OTHER, float("nan"))
-        missing = woes.get(MISSING, float("nan"))
-
-        @F.pandas_udf("double")
-        def _lookup(values: pd.Series) -> pd.Series:
-            out = values.map(woes)  # C-speed dict lookup per element
-            out[out.isna() & values.notna()] = other  # unseen category
-            out[values.isna()] = missing
-            return out.astype("float64")
-
-        return df.withColumn(output_col, _lookup(F.col(input_col)))
+        woe = {c: literal(w, "double") for c, w in self.woes.items()}
+        other = woe.get(OTHER, "CAST(NULL AS double)")
+        missing = woe.get(MISSING, "CAST(NULL AS double)")
+        # the coalesce serves an unseen category, and one whose WoE is NaN
+        # (NULL), the __other__ WoE
+        table = df.sparkSession.createDataFrame(
+            [(c, None if math.isnan(w) else float(w)) for c, w in self.woes.items()],
+            "__cat_key string, __cat_woe double",
+        )
+        x = name(input_col)
+        hit = F.expr(f"CAST({x} AS STRING)") == F.col("__cat_key")
+        sql = (
+            f"CASE WHEN {x} IS NULL THEN {missing} "
+            f"ELSE coalesce(__cat_woe, {other}) END"
+        )
+        return (
+            df.join(F.broadcast(table), hit, "left")
+            .withColumn(output_col, F.expr(sql))
+            .drop("__cat_key", "__cat_woe")
+        )
 
 
 def fit_categorical_woe(

@@ -159,7 +159,7 @@ def model_psi(
     fresh slice against the artifact without refitting or rescanning the
     training data (the artifact's summary table already carries the
     training bin counts; k rows, broadcast). Only the actual frame is
-    scanned: one Arrow-vectorized interval lookup + one aggregate.
+    scanned: one compiled interval lookup + one aggregate.
 
     Both sides compare the FITTED bins only: the training side excludes
     the Missing/Excluded summary rows, so the actual side's
@@ -173,13 +173,7 @@ def model_psi(
         _train_counts(model), "bucket string, n_expected double"
     )
 
-    @F.pandas_udf("string")
-    def _interval(values):
-        return model.assign_batch(values, "interval")
-
-    labeled = actual.withColumn(
-        "__bucket", _interval(F.col(input_col or model.x))
-    ).filter(
+    labeled = model.transform(actual, "interval", input_col or model.x, "__bucket").filter(
         F.col("__bucket").isNotNull()
         & ~F.col("__bucket").rlike("Missing|Excluded")
     )
@@ -219,7 +213,7 @@ def grouped_model_psi(
     weight_col: Optional[str] = None,
 ) -> DataFrame:
     """Per-group PSI of a new sample against a saved ``GroupedBins``
-    artifact: one vectorized per-group interval lookup over the actual
+    artifact: one compiled per-group interval lookup over the actual
     frame, one (group, bucket) aggregate, and the artifact's training
     counts broadcast — totals are PER GROUP (each group is its own
     distribution; pooling them would let a mix shift masquerade as

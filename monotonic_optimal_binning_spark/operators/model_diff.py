@@ -12,7 +12,7 @@ here without re-fitting anything:
   partition, and each refined interval carries both models' WoE and the
   exact delta. No data, no scan, no distributional assumption.
 - :func:`transform_churn` is ONE distributed pass over a scoring slice:
-  both models' assignments run as the same Arrow-vectorized lookup the
+  both models' assignments run as the same compiled lookup the
   serving transform uses, and a single algebraic aggregate reduces to
   row counts and WoE-delta moments. Nothing wider than one reduced row
   leaves the executors.
@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.lookup import tabulate
 from .binning import FittedBins
 
 __all__ = ["woe_shift_table", "transform_churn", "bin_stability", "summarize_bin_stability"]
@@ -66,29 +67,10 @@ def woe_shift_table(old: FittedBins, new: FittedBins) -> pd.DataFrame:
     )
     lefts = np.array([float("-inf"), *edges])
     rights = np.array([*edges, float("inf")])
-    # representative point per refined interval for bin lookup: finite
-    # midpoint, or a point just inside an infinite edge
-    reps = []
-    for lo, hi in zip(lefts, rights):
-        if math.isinf(lo) and math.isinf(hi):
-            reps.append(0.0)
-        elif math.isinf(lo):
-            reps.append(hi - 1.0)
-        elif math.isinf(hi):
-            reps.append(lo)  # [lo, inf) contains lo
-        else:
-            reps.append((lo + hi) / 2.0)
-    reps = pd.Series(reps, dtype=float)
 
     def _lookup(model: FittedBins):
-        idx = np.searchsorted(
-            np.asarray(model.lefts, dtype=float), reps.to_numpy(),
-            side="right",
-        ) - 1
-        idx = np.clip(idx, 0, len(model.labels) - 1)
-        labels = [model.labels[i] for i in idx]
-        woes = np.asarray(model.woes, dtype=float)[idx]
-        return labels, woes
+        idx = tabulate(model._bin_index, edges)  # each refined interval's bin
+        return [model.labels[i] for i in idx], np.asarray(model.woes, float)[idx]
 
     old_labels, old_woes = _lookup(old)
     new_labels, new_woes = _lookup(new)
@@ -125,30 +107,18 @@ def transform_churn(
     (|Δwoe| > ``woe_eps`` — the score-impact churn a promotion gate
     should threshold on), ``label_churn`` / ``woe_churn`` (fractions),
     ``max_abs_woe_delta`` and ``mean_abs_woe_delta`` — all from a single
-    algebraic aggregate over the same Arrow-vectorized assignment the
-    serving transform uses (one Arrow lookup per model plus literal
-    label→WoE maps, zero shuffles wider than the final reduced row).
+    algebraic aggregate over the serving transform's compiled label
+    and WoE lookups (zero shuffles wider than the final reduced row).
     """
     _check_comparable(old, new)
     input_col = input_col or old.x
-    # TWO Arrow lookups total (one per model): WoE per row is a pure
-    # function of the assigned interval, so it comes from a k-entry
-    # literal map over the label instead of a second UDF pass per model
-    scored = old.transform(
-        new.transform(df, assign="interval", input_col=input_col,
-                      output_col="__new_bin"),
-        assign="interval", input_col=input_col, output_col="__old_bin",
-    )
-
-    def _woe_map(model: FittedBins):
-        pairs = []
-        for lbl, w in zip(model.labels, np.asarray(model.woes, dtype=float)):
-            pairs.extend([F.lit(lbl), F.lit(float(w))])
-        return F.create_map(*pairs)
-
-    scored = scored.withColumn(
-        "__old_woe", _woe_map(old)[F.col("__old_bin")]
-    ).withColumn("__new_woe", _woe_map(new)[F.col("__new_bin")])
+    scored = df
+    for tag, model in (("old", old), ("new", new)):
+        for assign, out in (("interval", "bin"), ("woe", "woe")):
+            scored = model.transform(
+                scored, assign=assign, input_col=input_col,
+                output_col=f"__{tag}_{out}",
+            )
     delta = F.abs(F.col("__new_woe") - F.col("__old_woe"))
     valid = F.col("__old_woe").isNotNull() & F.col("__new_woe").isNotNull()
     row = scored.agg(

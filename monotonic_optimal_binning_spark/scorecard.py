@@ -28,10 +28,10 @@ must be reproducible by an ANSI SQL oracle and by every serving stack,
 and round-half-even differs between numpy and SQL engines.
 
 Scale design: :meth:`Scorecard.transform` is ONE narrow stage — each
-feature's bin→points lookup is the same broadcast searchsorted pandas
-UDF as :meth:`FittedBins.transform` (the whole artifact is kilobytes
-and ships inside the serialized UDF), and the total is a row-local sum.
-No shuffle, no join, no collect at any input size.
+feature's bin→points lookup is the same compiled comparison tree as
+:meth:`FittedBins.transform`, with the precomputed points of every bin
+as its literal leaves, and the total is a row-local sum. No shuffle,
+no join, no collect and no Python worker at any input size.
 
 The reference stops at per-bin WoE summaries
 (/root/reference/src/MOBPY/binning/mob.py:307-335); points scaling is
@@ -164,29 +164,23 @@ class Scorecard:
     ) -> DataFrame:
         """Append the total score (and optionally per-feature points).
 
-        One narrow stage: per feature, a broadcast searchsorted pandas
-        UDF maps the raw column to its bin's points (missing/excluded ->
-        neutral points); the score is the row-local sum. ``input_cols``
+        One narrow stage: per feature, a compiled lookup
+        (:meth:`FittedBins.lookup_sql`) maps the raw column to its bin's
+        precomputed points (missing/excluded -> neutral points); the
+        score is the row-local sum. ``input_cols``
         remaps feature -> column when serving names differ from fit
         names.
         """
         cols = input_cols or {}
         parts = []
         out = df
-
-        def _make_udf(m: FittedBins, feat: str, card: "Scorecard"):
-            @F.pandas_udf("double")
-            def _pts(values: pd.Series) -> pd.Series:
-                woe = m.assign_batch(values, "woe").to_numpy()
-                woe = np.nan_to_num(woe, nan=0.0)  # missing/excluded -> prior
-                return pd.Series(card._points_of_woe(feat, woe))
-
-            return _pts
-
         for name, m in self.models.items():
-            src = cols.get(name, m.x)
+            # a NaN bin WoE scores like missing: the prior
+            pts = self._points_of_woe(name, np.nan_to_num(m.woes, nan=0.0))
+            neutral = self.neutral_points(name)
+            sql = m.lookup_sql(cols.get(name, m.x), pts, missing=neutral, excluded=neutral)
             pcol = f"{name}_points"
-            out = out.withColumn(pcol, _make_udf(m, name, self)(F.col(src)))
+            out = out.withColumn(pcol, F.expr(sql))
             parts.append(pcol)
         total = sum((F.col(c) for c in parts[1:]), F.col(parts[0]))
         if self.round_points:

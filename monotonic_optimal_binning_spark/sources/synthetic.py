@@ -29,11 +29,16 @@ def _h(*cols) -> F.Column:
 
 
 def _doc_id(row_id: F.Column) -> F.Column:
-    """``doc-%012d`` of a non-negative row id without format_string:
-    java.util.Formatter is ~4x the cost of concat+lpad per row (measured
-    at 24M rows), and the generators emit one id per synthetic row.
-    Identical output for ids < 10^12 (the generators' domain)."""
-    return F.concat(F.lit("doc-"), F.lpad(row_id.cast("string"), 12, "0"))
+    """``doc-%012d`` of a row id without format_string: java.util.Formatter
+    is ~4x the cost of concat+lpad per row (measured at 24M rows), and the
+    generators emit one id per synthetic row. lpad would silently cut an
+    id outside [0, 10^12) to 12 characters (colliding ids), so such an id
+    fails the job."""
+    rid = row_id.cast("string")
+    bad = (row_id < 0) | (row_id >= 10**12)
+    return F.when(
+        bad, F.raise_error(F.concat(F.lit("doc id out of range: "), rid))
+    ).otherwise(F.concat(F.lit("doc-"), F.lpad(rid, 12, "0")))
 
 
 def token_table(

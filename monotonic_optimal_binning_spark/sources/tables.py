@@ -118,17 +118,3 @@ def save_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
-
-
-def write_iceberg_or_parquet(
-    df: DataFrame, target: str, *, partition_by=None, mode: str = "overwrite"
-) -> None:
-    """Write to an Iceberg table identifier (``cat.db.tbl``) when a catalog
-    is configured, else to a parquet path."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if "/" in target or os.path.isabs(target):
-        writer.parquet(target)
-    else:
-        writer.format("iceberg").saveAsTable(target)

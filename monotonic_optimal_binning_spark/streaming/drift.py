@@ -11,8 +11,8 @@ Split deliberately in two, because Structured Streaming forbids an
 aggregate over an aggregate in one query:
 
 - :func:`streaming_bucket_counts` — the STREAMING half: a stateless
-  broadcast interval lookup (the same Arrow-vectorized searchsorted UDF
-  the batch transform uses) + ONE watermarked windowed count. Append-mode
+  interval lookup (the same compiled expression as the batch
+  ``FittedBins.transform``) + ONE watermarked windowed count. Append-mode
   safe → write to any sink (parquet/Kafka/Delta); state is bounded by the
   watermark, shuffle keys are (window, bucket) — k·w cells regardless of
   traffic.
@@ -53,18 +53,14 @@ def streaming_bucket_counts(
     end). Rows whose value falls in Missing/Excluded are dropped on BOTH
     psi sides, mirroring ``model_psi``.
 
-    Scale: the lookup is stateless (cut-points ship with the serialized
-    UDF, kilobytes); the only state is the windowed count — at most
+    Scale: the lookup is stateless (the cut-points are literals in the
+    compiled expression); the only state is the windowed count — at most
     ``k_bins × open_windows`` cells per watermark horizon, independent of
     event volume. Adding a sliding ``slide`` multiplies state by the
     overlap factor only.
     """
 
     from pyspark.sql import types as T
-
-    @F.pandas_udf("string")
-    def _interval(values):
-        return model.assign_batch(values, "interval")
 
     # watermarks require TIMESTAMP; parquet written without UTC adjustment
     # reads as TIMESTAMP_NTZ — reinterpret under the session zone (pin_utc
@@ -73,9 +69,7 @@ def streaming_bucket_counts(
         stream = stream.withColumn(ts, F.col(ts).cast("timestamp"))
 
     labeled = (
-        stream.withColumn(
-            "__bucket", _interval(F.col(input_col or model.x))
-        )
+        model.transform(stream, "interval", input_col or model.x, "__bucket")
         .filter(
             F.col("__bucket").isNotNull()
             & ~F.col("__bucket").rlike("Missing|Excluded")

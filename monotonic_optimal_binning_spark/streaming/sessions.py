@@ -523,12 +523,7 @@ def streaming_asof_enrich(
 
 
 def streaming_woe_lookup(events: DataFrame, model, value_col: str) -> DataFrame:
-    """Apply a fitted FittedBins model to a stream (stateless pandas UDF —
-    identical code path as batch transform; works under writeStream)."""
-    import pandas as pd  # noqa: F401
-
-    @F.pandas_udf("double")
-    def _woe(values):
-        return model.assign_batch(values, "woe")
-
-    return events.withColumn(f"{value_col}_woe", _woe(F.col(value_col)))
+    """Apply a fitted FittedBins model to a stream (stateless compiled
+    lookup — the same expression as the batch ``transform``; works under
+    writeStream)."""
+    return model.transform(events, "woe", value_col, f"{value_col}_woe")

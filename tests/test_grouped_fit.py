@@ -109,17 +109,34 @@ def test_grouped_fit_scan_count(spark):
     assert after - before <= 10, f"too many Spark jobs: {after - before}"
 
 
+def _served_vs_pandas(out, want):
+    """Spark-side ``(isNull, isnan, value)`` of column ``o`` per row id
+    against the pandas answer with NaN mapped to NULL (toPandas() would
+    fold NULL and NaN together and hide the difference)."""
+    rows = out.select(
+        "id", F.col("o").isNull().alias("n"),
+        F.coalesce(F.isnan("o"), F.lit(False)).alias("nan"), "o",
+    ).collect()
+    got = {r["id"]: (r["n"], r["nan"], r["o"]) for r in rows}
+    exp = {
+        i: (True, False, None) if np.isnan(v) else (False, False, float(v))
+        for i, v in enumerate(want)
+    }
+    assert got == exp
+
+
 def test_numeric_transform_codegen_equals_pandas_udf(spark):
-    """r8: the numeric assign modes compile to a JVM when-chain; it must
-    be value-identical (NaN-for-NaN) to the pandas-UDF assign_batch path
-    on nulls, NaNs, excluded values, bin edges, ±inf, unseen groups and
-    non-binary groups."""
+    """The numeric assign modes compile to a JVM lookup; it must serve
+    exactly the pandas ``assign_batch`` answer, with every missing
+    output (null/NaN input, excluded value, unseen or null group,
+    non-binary group under woe) a SQL NULL, never NaN — on nulls, NaNs,
+    excluded values, bin edges, ±inf, unseen groups and non-binary
+    groups."""
     from monotonic_optimal_binning_spark import (
         BinningConstraints,
         SparkMonotonicBinner,
         fit_binners_per_group,
     )
-    from monotonic_optimal_binning_spark.operators.binning import FittedBins
 
     rng = np.random.default_rng(3)
     pdf = pd.DataFrame(
@@ -138,60 +155,45 @@ def test_numeric_transform_codegen_equals_pandas_udf(spark):
                   7.0, 5.0, 5.0, 5.0, 99.0],
         }
     )
-    full = pd.concat(
-        [pdf[["g", "x"]], probe], ignore_index=True
-    )
-    sdf = spark.createDataFrame(full)
-
     gb = fit_binners_per_group(
         spark.createDataFrame(pdf), "g", "x", "y",
         constraints=BinningConstraints(max_bins=5, min_bins=2),
     )
     # also hit a model's exact bin edges
     edges = [float(r) for r in gb["a"].rights[:-1]]
-    sdf = sdf.union(
-        spark.createDataFrame(
-            pd.DataFrame({"g": ["a"] * len(edges), "x": edges})
-        )
+    full = pd.concat(
+        [pdf[["g", "x"]], probe,
+         pd.DataFrame({"g": ["a"] * len(edges), "x": edges})],
+        ignore_index=True,
     )
+    rows = [
+        (i, None if g is None or g != g else str(g),
+         None if x is None else float(x))
+        for i, (g, x) in enumerate(zip(full["g"], full["x"]))
+    ]
+    sdf = spark.createDataFrame(rows, "id long, g string, x double")
+    xs = full["x"].astype(float)
 
     for mode in ("woe", "left", "right"):
-        fast = gb.transform(sdf, assign=mode, input_col="x",
-                            output_col="o").select("g", "x", "o")
+        fast = gb.transform(sdf, assign=mode, input_col="x", output_col="o")
         plan = fast._jdf.queryExecution().toString()
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        # force the UDF path by lowering the codegen guard
-        orig = FittedBins.CODEGEN_MAX_BINS
-        try:
-            FittedBins.CODEGEN_MAX_BINS = 0
-            slow = gb.transform(sdf, assign=mode, input_col="x",
-                                output_col="o").select("g", "x", "o")
-        finally:
-            FittedBins.CODEGEN_MAX_BINS = orig
-        a = fast.toPandas().sort_values(["g", "x"]).reset_index(drop=True)
-        b = slow.toPandas().sort_values(["g", "x"]).reset_index(drop=True)
-        np.testing.assert_array_equal(
-            a["o"].to_numpy(float), b["o"].to_numpy(float)
-        )
+        want = np.full(len(full), np.nan)
+        for g, m in gb.items():
+            if mode == "woe" and m.woes is None:
+                continue
+            sel = (full["g"] == g).to_numpy()
+            want[sel] = m.assign_batch(xs[sel], mode).to_numpy()
+        _served_vs_pandas(fast, want)
 
     # single-model path with excluded values, same contract
     bx = SparkMonotonicBinner(
         "x", "y", exclude_values=[7.0],
         constraints=BinningConstraints(max_bins=5, min_bins=2),
     ).fit(spark.createDataFrame(pdf[pdf["g"] != "c"][["x", "y"]]))
-    sx = spark.createDataFrame(full[["x"]])
+    sx = sdf.select("id", "x")
     for mode in ("woe", "left", "right"):
         fast = bx.model_.transform(sx, assign=mode, output_col="o")
         plan = fast._jdf.queryExecution().toString()
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        orig = FittedBins.CODEGEN_MAX_BINS
-        try:
-            FittedBins.CODEGEN_MAX_BINS = 0
-            slow = bx.model_.transform(sx, assign=mode, output_col="o")
-        finally:
-            FittedBins.CODEGEN_MAX_BINS = orig
-        a = fast.toPandas().sort_values(["x"]).reset_index(drop=True)
-        b = slow.toPandas().sort_values(["x"]).reset_index(drop=True)
-        np.testing.assert_array_equal(
-            a["o"].to_numpy(float), b["o"].to_numpy(float)
-        )
+        _served_vs_pandas(fast, bx.model_.assign_batch(xs, mode).to_numpy())

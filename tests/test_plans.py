@@ -477,3 +477,91 @@ def test_source_overlap_single_posting_pipeline(spark):
     assert plan.count("FileScan") == 1
     # no joins at all: sizes attach via windows over the counted table
     assert "Join" not in plan
+
+
+def _serving_plans(spark):
+    """(name, DataFrame) for every serving path, including a 4096-cut
+    model and a 200-group model."""
+    import datetime
+
+    import numpy as np
+
+    from monotonic_optimal_binning_spark import (
+        SparkMonotonicBinner,
+        fit_binners_per_group,
+    )
+    from monotonic_optimal_binning_spark.operators.binning import (
+        FittedBins,
+        GroupedBins,
+    )
+    from monotonic_optimal_binning_spark.operators.calibration import (
+        isotonic_calibrate,
+        isotonic_calibrate_grouped,
+    )
+    from monotonic_optimal_binning_spark.operators.categorical import (
+        fit_categorical_woe,
+    )
+    from monotonic_optimal_binning_spark.operators.drift import (
+        grouped_model_psi,
+        model_psi,
+    )
+    from monotonic_optimal_binning_spark.scorecard import Scorecard
+    from monotonic_optimal_binning_spark.streaming.drift import (
+        streaming_bucket_counts,
+    )
+    from monotonic_optimal_binning_spark.streaming.sessions import (
+        streaming_woe_lookup,
+    )
+
+    rng = np.random.default_rng(0)
+    small = FittedBins.from_cuts(
+        "x", [1.0, 2.0, 3.0], [0.1, -0.2, 0.3, 0.4], exclude_values=[9.0]
+    )
+    big = FittedBins.from_cuts(
+        "x", list(np.arange(4096, dtype=float)), list(rng.normal(size=4097))
+    )
+    gb = GroupedBins("g", "x", "y", {"a": small, "b": big})
+    gb200 = GroupedBins(
+        "g", "x", "y",
+        {f"g{i}": FittedBins.from_cuts("x", [1.0, 2.0], [0.1, 0.2, 0.3])
+         for i in range(200)},
+    )
+    df = spark.createDataFrame(
+        [(float(i % 7), "a", i % 2, 0.1 * (i % 10), f"c{i % 4}",
+          datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=i))
+         for i in range(60)],
+        "x double, g string, y int, s double, c string, ts timestamp",
+    )
+    cal = isotonic_calibrate(df, "s", "y", prebins="exact")
+    gcal = isotonic_calibrate_grouped(df, "s", "y", "g", prebins="exact")
+    card = Scorecard({"x": small})
+    # PSI reads the training counts of a fitted artifact
+    fitted = SparkMonotonicBinner("x", "y").fit(df).model_
+    fitted_gb = fit_binners_per_group(df, "g", "x", "y")
+    out = []
+    for assign in ("interval", "left", "right", "woe"):
+        out.append((f"FittedBins {assign}", small.transform(df, assign=assign)))
+        out.append((f"4096-cut {assign}", big.transform(df, assign=assign)))
+        out.append((f"GroupedBins {assign}", gb.transform(df, assign=assign)))
+        out.append((f"200 groups {assign}", gb200.transform(df, assign=assign)))
+    out += [
+        ("Scorecard.transform", card.transform(df)),
+        ("Scorecard.reason_codes", card.reason_codes(df)),
+        ("IsotonicCalibration", cal.transform(df)),
+        ("GroupedIsotonicCalibration", gcal.transform(df)),
+        ("CatBins", fit_categorical_woe(df, "c", "y").transform(df)),
+        ("model_psi", model_psi(fitted, df)),
+        ("grouped_model_psi", grouped_model_psi(fitted_gb, df)),
+        ("streaming_bucket_counts", streaming_bucket_counts(small, df, "ts")),
+        ("streaming_woe_lookup", streaming_woe_lookup(df, small, "x")),
+    ]
+    return out
+
+
+def test_serving_paths_plan_no_python(spark):
+    """Every lookup compiles to Catalyst expressions: no Arrow/batch
+    Python evaluation node in any serving plan, at any model size."""
+    for label, df in _serving_plans(spark):
+        plan = plan_of(df, "simple")
+        assert "ArrowEvalPython" not in plan, label
+        assert "BatchEvalPython" not in plan, label

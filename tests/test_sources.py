@@ -114,3 +114,20 @@ def test_bare_name_never_probes_cwd(spark, tmp_path, monkeypatch):
     # resolve against the JVM's CWD, not Python's — use absolute)
     assert read_table(spark, str(local)).count() == 2
     assert read_table(spark, str(local), fmt="parquet").count() == 2
+
+
+def test_doc_id_fails_loudly_past_twelve_digits(spark):
+    """``doc-%012d`` via lpad would truncate a 13-digit id and collide it
+    with another; such ids must fail the job instead."""
+    from pyspark.errors import PySparkException
+
+    from monotonic_optimal_binning_spark.sources.synthetic import _doc_id
+
+    ok = spark.createDataFrame([(0,), (42,), (10**12 - 1,)], "id long")
+    assert [r[0] for r in ok.select(_doc_id(F.col("id"))).collect()] == [
+        "doc-000000000000", "doc-000000000042", "doc-999999999999",
+    ]
+    for bad in (10**12, 10**12 + 7, -1):
+        df = spark.createDataFrame([(bad,)], "id long")
+        with pytest.raises(PySparkException, match="doc id out of range"):
+            df.select(_doc_id(F.col("id"))).collect()
