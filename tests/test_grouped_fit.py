@@ -2,12 +2,16 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from monotonic_optimal_binning_spark import (
     BinningConstraints,
+    DataError,
     SparkMonotonicBinner,
+    collect_group_stats,
     fit_binners_per_group,
+    fit_groups_from_stats,
 )
 
 
@@ -197,3 +201,114 @@ def test_numeric_transform_codegen_equals_pandas_udf(spark):
         plan = fast._jdf.queryExecution().toString()
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
         _served_vs_pandas(fast, bx.model_.assign_batch(xs, mode).to_numpy())
+
+
+def _one_group_frame(seed=21, n=6000):
+    """More than 1024 distinct clean x (so ``"auto"`` takes the quantile
+    fallback), NaN x and y, ``-999`` codes and non-unit weights."""
+    rng = np.random.default_rng(seed)
+    x = np.round(rng.normal(0, 1, n), 4)
+    p = 1.0 / (1.0 + np.exp(-1.3 * x))
+    y = (rng.random(n) < p).astype(float)
+    pdf = pd.DataFrame({"x": x, "y": y, "w": rng.choice([0.5, 1.0, 2.0, 3.0], n)})
+    pdf.loc[pdf.index % 29 == 0, "x"] = np.nan
+    pdf.loc[pdf.index % 31 == 0, "x"] = -999.0
+    pdf.loc[pdf.index % 37 == 0, "y"] = np.nan
+    pdf["one"] = "all"
+    return pdf
+
+
+def _canon_rows(rows):
+    """Stats rows without ``_g``, in a stable (tag, gkey) order."""
+    def key(r):
+        g = r["gkey"]
+        odd = g is None or np.isnan(g)
+        return (r["tag"], g is None, odd, 0.0 if odd else g)
+
+    return sorted(({k: v for k, v in r.items() if k != "_g"} for r in rows), key=key)
+
+
+def _assert_rows_equal(single, grouped):
+    a, b = _canon_rows(single), _canon_rows(grouped)
+    assert len(a) == len(b)
+    for ra, rb in zip(a, b):
+        assert ra.keys() == rb.keys()
+        for k in ra:
+            va, vb = ra[k], rb[k]
+            if va is None or vb is None:
+                assert va is vb, (k, ra, rb)
+            elif isinstance(va, str):
+                assert va == vb
+            else:
+                np.testing.assert_allclose(vb, va, rtol=1e-12, err_msg=k)
+
+
+_ONE_GROUP_CASES = [
+    ("exact", {}),
+    (16, {}),
+    ("auto", {}),
+    (16, {"weight_col": "w"}),
+    ("auto", {"exclude_values": [-999.0]}),
+    ("exact", {"exclude_values": [-999.0], "weight_col": "w"}),
+]
+
+
+@pytest.mark.parametrize("prebins,extra", _ONE_GROUP_CASES)
+def test_one_group_fit_equals_single_fit(spark, prebins, extra):
+    """The per-group scan on a constant group column is the single fit:
+    the same stats rows (``_g`` dropped), bucketing, ``prebinned`` flag
+    and solved model."""
+    sdf = spark.createDataFrame(_one_group_frame())
+    kw = dict(constraints=BinningConstraints(max_bins=6, min_bins=2),
+              prebins=prebins, **extra)
+
+    single = SparkMonotonicBinner("x", "y", **kw).collect_stats(sdf)
+    grouped = collect_group_stats(sdf, "one", "x", "y", **kw)
+    if prebins == "auto":
+        assert single.splits is not None  # the LIMIT guard tripped
+    assert single.splits == grouped.splits
+    _assert_rows_equal(single.rows, grouped.rows)
+    assert {r["_g"] for r in grouped.rows} == {"all"}
+
+    solo = SparkMonotonicBinner("x", "y", **kw).fit(sdf).model_
+    fused = fit_binners_per_group(sdf, "one", "x", "y", **kw)["all"]
+    assert solo.diagnostics["prebinned"] == fused.diagnostics["prebinned"]
+    assert solo.diagnostics["prebinned"] == (single.splits is not None)
+    pd.testing.assert_frame_equal(solo.bins_df, fused.bins_df)
+    pd.testing.assert_frame_equal(solo.summary_df, fused.summary_df)
+    assert solo.resolved_sign == fused.resolved_sign
+
+
+def test_one_group_incremental_equals_single(spark):
+    """Folding a new partition under a prior's frozen splits gives the
+    same rows with or without the group key, and both refuse a
+    high-cardinality partition on a prior the auto policy grouped
+    exactly."""
+    pdf = _one_group_frame(seed=23)
+    p1 = spark.createDataFrame(pdf.iloc[:3000])
+    p2 = spark.createDataFrame(pdf.iloc[3000:])
+    kw = dict(prebins=16, exclude_values=[-999.0], weight_col="w")
+    b = SparkMonotonicBinner("x", "y", **kw)
+    single = b.collect_stats(p2, prior=b.collect_stats(p1, label="p1"), label="p2")
+    g1 = collect_group_stats(p1, "one", "x", "y", label="p1", **kw)
+    grouped = collect_group_stats(p2, prior=g1, label="p2", **kw)
+    assert single.splits == grouped.splits == g1.splits
+    _assert_rows_equal(single.rows, grouped.rows)
+    for es, eg in zip(single.lineage, grouped.lineage):
+        assert {k: v for k, v in es.items() if k != "n_groups"} == {
+            k: v for k, v in eg.items() if k != "n_groups"
+        }
+    solo = SparkMonotonicBinner("x", "y", **kw).fit_from_stats(single).model_
+    fused = fit_groups_from_stats(grouped, **kw)["all"]
+    pd.testing.assert_frame_equal(solo.bins_df, fused.bins_df)
+
+    low = pdf.assign(x=np.arange(len(pdf)) % 10 * 1.0).iloc[:500]
+    high = pdf.assign(x=np.arange(len(pdf)) + 0.5).iloc[:2000]
+    auto = SparkMonotonicBinner("x", "y", prebins="auto")
+    prior = auto.collect_stats(spark.createDataFrame(low))
+    gprior = collect_group_stats(spark.createDataFrame(low), "one", "x", "y")
+    assert prior.splits is None and gprior.splits is None
+    with pytest.raises(DataError, match="incremental partition"):
+        auto.collect_stats(spark.createDataFrame(high), prior=prior)
+    with pytest.raises(DataError, match="incremental partition"):
+        collect_group_stats(spark.createDataFrame(high), prior=gprior)
