@@ -882,6 +882,209 @@ class BinStats:
         return out
 
 
+def _collect_stats_rows(
+    binner: "SparkMonotonicBinner",
+    df: DataFrame,
+    group_col: Optional[str] = None,
+    frozen_splits=_UNSET,
+):
+    """THE distributed pass of every fit: one scan of ``df`` to collected
+    per-(tag, gkey) sufficient-statistic rows. With ``group_col`` the
+    aggregate keys lead with the group value (``_g``), so one scan serves
+    every group; the single fit is the same scan with no group key.
+
+    Returns ``(stats_rows, splits)`` where ``splits`` is the quantile
+    bucketing actually used (None = exact distinct-x grouping).
+    ``frozen_splits`` (incremental refits) bypasses the prebins policy
+    entirely: a prior artifact's bucketing is reused as-is so stats stay
+    algebraically mergeable across partitions.
+
+    With ``weight_col`` set, null/negative/non-finite weights (tallied
+    inside the same scan) are rejected and cells whose total weight is
+    zero are dropped — they carry no effective data, and an all-zero
+    cell's extrema/representative are null by construction.
+
+    Binary detection, and the reference's binary recode (MOBPY
+    binning/mob.py:216-227, clean partition only), both happen
+    DRIVER-SIDE on the collected statistics (_detect_binary_from_stats /
+    _recode_c_rows): the fit is one full scan of the input, plus one
+    approxQuantile pass when pre-binning.
+    """
+    x_clean, x_missing, x_excluded, y_val = binner._predicates(df)
+    w = None
+    if binner.weight_col is not None:
+        _check_numeric(df, binner.weight_col)
+        w = F.col(binner.weight_col).cast("double")
+    keys = [F.col(group_col).alias("_g")] if group_col else []
+    tag = (
+        F.when(x_missing, F.lit("M"))
+        .when(x_excluded, F.lit("E"))
+        .otherwise(F.lit("C"))
+    )
+    xd = F.col(binner.x).cast("double")
+    nonfinite_y = F.when(
+        y_val.isNotNull() & (F.abs(y_val) == F.lit(float("inf"))), 1
+    ).otherwise(0)
+
+    def _scan(splits: Optional[List[float]] = None) -> DataFrame:
+        """The stats aggregate: by distinct x, or by quantile bucket of
+        clean x when ``splits`` is given (Missing/Excluded rows keep
+        their own x either way)."""
+        work = df.withColumn("_mob_tag", tag)
+        gkey = xd
+        if splits is not None:
+            from pyspark.ml.feature import Bucketizer
+
+            work = Bucketizer(
+                splits=splits,
+                inputCol="_mob_xb",
+                outputCol="_mob_bucket",
+                handleInvalid="keep",
+            ).transform(work.withColumn("_mob_xb", F.when(x_clean, xd)))
+            gkey = F.when(
+                F.col("_mob_tag") == "C", F.col("_mob_bucket")
+            ).otherwise(xd)
+        return _suff_stats_agg(
+            work,
+            [*keys, F.col("_mob_tag").alias("tag"), gkey.alias("gkey")],
+            y_val,
+            nonfinite_y,
+            xd,
+            w,
+        )
+
+    guard = binner.AUTO_EXACT_MAX_GROUPS
+    if frozen_splits is not _UNSET:
+        splits = (
+            None if frozen_splits is None else [float(s) for s in frozen_splits]
+        )
+        if splits is None and binner.prebins == "auto":
+            # frozen EXACT grouping: a prior artifact grouped by distinct
+            # x, so this partition must too — but an auto policy only
+            # chose exact because cardinality was low, so keep its guard:
+            # a high-cardinality new partition should fail loudly (refit
+            # with int prebins), not OOM the driver
+            stats = _scan().limit(guard + 1).collect()
+            if len(stats) > guard:
+                cell = f"{group_col}, {binner.x}" if group_col else binner.x
+                raise DataError(
+                    f"incremental partition has more than {guard} distinct "
+                    f"({cell}, tag) cells but the prior stats were collected "
+                    f"with exact grouping; refit from scratch with an "
+                    f"integer prebins policy to bound the artifact"
+                )
+        else:
+            stats = _scan(splits).collect()
+    elif binner.prebins == "auto":
+        # ONE upstream scan on the common path: the exact aggregate is
+        # collected behind a LIMIT guard (bounding the TOTAL, all-groups
+        # collect), unpersisted — when it returns <= guard rows the result
+        # is complete and exact (reference-identical) and no cache was
+        # written for nothing. Only when the guard trips does the fallback
+        # persist the aggregate (so the rebucket + M/E collects fill and
+        # reuse one cache) and fold it into quantile buckets; that rare
+        # high-cardinality path pays the aggregate twice (probe + cache
+        # fill) plus the approxQuantile probe of df — the trade that keeps
+        # the fast path persist-free.
+        stats_df = _scan()
+        stats = stats_df.limit(guard + 1).collect()
+        splits = None
+        if len(stats) > guard:
+            stats_df = stats_df.persist()
+            splits = binner._prebin_splits(
+                df, x_clean, k=binner.config.default_prebins
+            )
+            if splits is not None:
+                stats = _rebucket_stats(
+                    stats_df, splits, extra_keys=("_g",) if group_col else ()
+                ).collect()
+                stats += stats_df.filter(F.col("tag") != "C").collect()
+            else:
+                # degenerate x (no finite interior quantiles): the guard
+                # overflow can then only come from M/E tag rows
+                stats = stats_df.collect()
+            stats_df.unpersist()
+    else:
+        splits = binner._prebin_splits(df, x_clean)
+        stats = _scan(splits).collect()
+
+    if binner.weight_col is not None:
+        bad = sum(int(r["n_bad_w"] or 0) for r in stats)
+        if bad > 0:
+            raise DataError(
+                f"weight column '{binner.weight_col}' has {bad} "
+                f"null/negative/non-finite values"
+            )
+        stats = [r for r in stats if (r["n_rows"] or 0) > 0]
+    return stats, splits
+
+
+def _stats_artifact(
+    binner: "SparkMonotonicBinner",
+    df: DataFrame,
+    group_col: Optional[str],
+    prior: Optional[BinStats],
+    label: Optional[str],
+) -> BinStats:
+    """One scan of ``df`` → a :class:`BinStats` partition (per
+    ``group_col`` group when set), folded into ``prior`` under the prior's
+    frozen bucketing (the prior is not mutated)."""
+    if prior is not None and prior.weight_col != binner.weight_col:
+        raise ValueError(
+            f"prior stats were weighted by {prior.weight_col!r}, "
+            f"binner weights by {binner.weight_col!r}"
+        )
+    stats, splits = _collect_stats_rows(
+        binner, df, group_col, _UNSET if prior is None else prior.splits
+    )
+    rows = [r.asDict() for r in stats]
+    names = {"C": "n_clean", "M": "n_missing", "E": "n_excluded"}
+    entry: Dict[str, Any] = {
+        "label": label,
+        **dict.fromkeys(names.values(), 0),
+        # a single fit counts its clean cells, a grouped fit its groups
+        "n_groups": (
+            len({r["_g"] for r in rows})
+            if group_col
+            else sum(r["tag"] == "C" for r in rows)
+        ),
+    }
+    for r in rows:
+        entry[names[r["tag"]]] += _count_val(r["n_rows"])
+    for k in names.values():
+        entry[k] = _count_val(entry[k])
+    part = BinStats(
+        x=binner.x,
+        y=binner.y,
+        splits=splits,
+        exclude_values=(
+            list(binner.exclude_values) if binner.exclude_values else None
+        ),
+        rows=rows,
+        lineage=[entry],
+        group_col=group_col,
+        weight_col=binner.weight_col,
+    )
+    return prior.merge(part) if prior is not None else part
+
+
+def _check_artifact(stats: BinStats, exclude_values, weight_col) -> None:
+    """Refuse to solve an artifact collected under other partition
+    predicates or another weighting than the solve asks for."""
+    if (stats.exclude_values or None) != (
+        list(exclude_values) if exclude_values else None
+    ):
+        raise ValueError(
+            "stats were collected under different exclude_values than "
+            "requested — Excluded partitions would disagree"
+        )
+    if stats.weight_col != weight_col:
+        raise ValueError(
+            f"stats were weighted by {stats.weight_col!r}, solve "
+            f"requested weight_col={weight_col!r}"
+        )
+
+
 class SparkMonotonicBinner:
     """End-to-end monotonic optimal binning on a Spark DataFrame.
 
@@ -895,11 +1098,13 @@ class SparkMonotonicBinner:
         merge_strategy: HIGHEST_PVALUE (Welch t-test) | SMALLEST_LOSS |
             BALANCED_SIZE.
         prebins: candidate-group policy.
-            ``"auto"`` (DEFAULT, the scale-safe path): one cheap
-            ``approx_count_distinct(x)`` probe decides — low-cardinality x
-            groups exactly (reference parity for free), high-cardinality x
-            is pre-binned to ``config.default_prebins`` quantiles so the
-            driver collect is bounded to kilobytes at ANY input size.
+            ``"auto"`` (DEFAULT, the scale-safe path): the exact
+            distinct-x aggregate is collected behind a ``LIMIT
+            AUTO_EXACT_MAX_GROUPS + 1`` guard — low-cardinality x groups
+            exactly in that one scan (reference parity for free); when the
+            guard trips, the aggregate is folded into
+            ``config.default_prebins`` quantile buckets so the driver
+            collect is bounded to kilobytes at ANY input size.
             ``None`` / ``"exact"``: exact distinct-x grouping, matching the
             reference verbatim (/root/reference/src/MOBPY/core/pava.py:268)
             — the parity-test mode; a driver OOM hazard on continuous x at
@@ -907,8 +1112,8 @@ class SparkMonotonicBinner:
             ``int``: always pre-bin to that many quantile buckets.
     """
 
-    #: "auto" groups exactly while approx distinct(x) is at most this many
-    #: groups (well inside driver-collect comfort); above it, quantile
+    #: "auto" groups exactly while the exact aggregate has at most this
+    #: many rows (well inside driver-collect comfort); above it, quantile
     #: pre-binning bounds the collected state regardless of cardinality
     AUTO_EXACT_MAX_GROUPS = 1024
 
@@ -1011,8 +1216,8 @@ class SparkMonotonicBinner:
 
     def fit(self, df: DataFrame) -> "SparkMonotonicBinner":
         t0 = time.time()
-        stats, _splits, prebinned = self._collect_stats_rows(df)
-        self.model_ = self._solve_from_stats(stats, prebinned)
+        stats, splits = _collect_stats_rows(self, df)
+        self.model_ = self._solve_from_stats(stats, splits is not None)
         self.fit_metrics_["fit_seconds"] = time.time() - t0
         return self
 
@@ -1032,50 +1237,12 @@ class SparkMonotonicBinner:
         the returned artifact equals stats computed in one pass over the
         union, at the cost of scanning only the new partition.
         """
-        if prior is not None:
-            if (prior.x, prior.y) != (self.x, self.y):
-                raise ValueError(
-                    f"prior stats are for ({prior.x!r}, {prior.y!r}), "
-                    f"binner is ({self.x!r}, {self.y!r})"
-                )
-            if prior.weight_col != self.weight_col:
-                raise ValueError(
-                    f"prior stats were weighted by {prior.weight_col!r}, "
-                    f"binner weights by {self.weight_col!r}"
-                )
-            stats, splits, _ = self._collect_stats_rows(
-                df, frozen_splits=prior.splits
+        if prior is not None and (prior.x, prior.y) != (self.x, self.y):
+            raise ValueError(
+                f"prior stats are for ({prior.x!r}, {prior.y!r}), "
+                f"binner is ({self.x!r}, {self.y!r})"
             )
-        else:
-            stats, splits, _ = self._collect_stats_rows(df)
-        rows = [
-            dict(r.asDict()) if hasattr(r, "asDict") else dict(r)
-            for r in stats
-        ]
-        names = {"C": "n_clean", "M": "n_missing", "E": "n_excluded"}
-        entry: Dict[str, Any] = {
-            "label": label,
-            "n_clean": 0,
-            "n_missing": 0,
-            "n_excluded": 0,
-            "n_groups": sum(1 for r in rows if r["tag"] == "C"),
-        }
-        for r in rows:
-            entry[names[r["tag"]]] += _count_val(r["n_rows"])
-        for k in names.values():
-            entry[k] = _count_val(entry[k])
-        part = BinStats(
-            x=self.x,
-            y=self.y,
-            splits=splits,
-            exclude_values=(
-                list(self.exclude_values) if self.exclude_values else None
-            ),
-            rows=rows,
-            lineage=[entry],
-            weight_col=self.weight_col,
-        )
-        return prior.merge(part) if prior is not None else part
+        return _stats_artifact(self, df, None, prior, label)
 
     def fit_from_stats(self, stats: BinStats) -> "SparkMonotonicBinner":
         """Driver-only solve from a (possibly merged) artifact: binary
@@ -1092,18 +1259,7 @@ class SparkMonotonicBinner:
                 f"stats are for ({stats.x!r}, {stats.y!r}), binner is "
                 f"({self.x!r}, {self.y!r})"
             )
-        if (stats.exclude_values or None) != (
-            list(self.exclude_values) if self.exclude_values else None
-        ):
-            raise ValueError(
-                "stats were collected under different exclude_values than "
-                "this binner's — Excluded partitions would disagree"
-            )
-        if stats.weight_col != self.weight_col:
-            raise ValueError(
-                f"stats were weighted by {stats.weight_col!r}, binner "
-                f"weights by {self.weight_col!r}"
-            )
+        _check_artifact(stats, self.exclude_values, self.weight_col)
         t0 = time.time()
         self.model_ = self._solve_from_stats(
             stats.rows,
@@ -1113,165 +1269,6 @@ class SparkMonotonicBinner:
         self.fit_metrics_["fit_seconds"] = time.time() - t0
         self.fit_metrics_["n_partitions"] = len(stats.lineage)
         return self
-
-    def _collect_stats_rows(self, df: DataFrame, frozen_splits=_UNSET):
-        """Weight-validating wrapper over :meth:`_collect_stats_rows_raw`:
-        with ``weight_col`` set, rejects null/negative/non-finite weights
-        (tallied inside the SAME single scan) and drops groups whose total
-        weight is zero — they carry no effective data, and an all-zero
-        group's extrema/representative are null by construction."""
-        stats, splits, prebinned = self._collect_stats_rows_raw(
-            df, frozen_splits
-        )
-        if self.weight_col is not None:
-            bad = sum(int(r["n_bad_w"] or 0) for r in stats)
-            if bad > 0:
-                raise DataError(
-                    f"weight column '{self.weight_col}' has {bad} "
-                    f"null/negative/non-finite values"
-                )
-            stats = [r for r in stats if (r["n_rows"] or 0) > 0]
-        return stats, splits, prebinned
-
-    def _collect_stats_rows_raw(self, df: DataFrame, frozen_splits=_UNSET):
-        """THE distributed pass of the fit, factored out so the incremental
-        path (:meth:`collect_stats`) shares it verbatim: one scan of the
-        input to collected per-(tag, gkey) sufficient-statistic rows.
-
-        Returns ``(stats_rows, splits, prebinned)`` where ``splits`` is the
-        quantile bucketing actually used (None = exact distinct-x
-        grouping). ``frozen_splits`` (incremental refits) bypasses the
-        prebins policy entirely: a prior artifact's bucketing is reused
-        as-is so stats stay algebraically mergeable across partitions.
-
-        Binary detection, and the reference's binary recode
-        (/root/reference/src/MOBPY/binning/mob.py:216-227, clean partition
-        only), both happen DRIVER-SIDE on the collected sufficient
-        statistics (_detect_binary_from_stats/_recode_c_rows) — the fit is
-        a single full scan of the input (plus one approxQuantile pass when
-        prebinning explicitly).
-        """
-        x_clean, x_missing, x_excluded, y_val = self._predicates(df)
-        y_eff = y_val
-        if self.weight_col is not None:
-            _check_numeric(df, self.weight_col)
-            w = F.col(self.weight_col).cast("double")
-        else:
-            w = None
-
-        tag = (
-            F.when(x_missing, F.lit("M"))
-            .when(x_excluded, F.lit("E"))
-            .otherwise(F.lit("C"))
-        )
-        xd = F.col(self.x).cast("double")
-        nonfinite_y = F.when(
-            y_val.isNotNull() & (F.abs(y_val) == F.lit(float("inf"))), 1
-        ).otherwise(0)
-
-        def _exact_agg() -> DataFrame:
-            work = df.withColumn("_mob_tag", tag)
-            return _suff_stats_agg(
-                work,
-                [F.col("_mob_tag").alias("tag"), xd.alias("gkey")],
-                y_eff,
-                nonfinite_y,
-                xd,
-                w,
-            )
-
-        def _bucketed_agg(splits: List[float]) -> DataFrame:
-            from pyspark.ml.feature import Bucketizer
-
-            work = df.withColumn("_mob_tag", tag).withColumn(
-                "_mob_xb", F.when(x_clean, xd)
-            )
-            work = Bucketizer(
-                splits=splits,
-                inputCol="_mob_xb",
-                outputCol="_mob_bucket",
-                handleInvalid="keep",
-            ).transform(work)
-            group_key = F.when(
-                F.col("_mob_tag") == "C", F.col("_mob_bucket")
-            ).otherwise(xd)
-            return _suff_stats_agg(
-                work,
-                [F.col("_mob_tag").alias("tag"), group_key.alias("gkey")],
-                y_eff,
-                nonfinite_y,
-                xd,
-                w,
-            )
-
-        if frozen_splits is not _UNSET:
-            if frozen_splits is None:
-                # frozen EXACT grouping: a prior artifact grouped by
-                # distinct x, so this partition must too — but an auto
-                # policy only chose exact because cardinality was low, so
-                # keep its guard: a high-cardinality new partition should
-                # fail loudly (refit with int prebins), not OOM the driver
-                if self.prebins == "auto":
-                    guard = self.AUTO_EXACT_MAX_GROUPS
-                    stats = _exact_agg().limit(guard + 1).collect()
-                    if len(stats) > guard:
-                        raise DataError(
-                            f"incremental partition has more than {guard} "
-                            f"distinct ({self.x}, tag) groups but the prior "
-                            f"stats were collected with exact grouping; "
-                            f"refit from scratch with an integer prebins "
-                            f"policy to bound the artifact"
-                        )
-                else:
-                    stats = _exact_agg().collect()
-                return stats, None, False
-            splits = [float(s) for s in frozen_splits]
-            return _bucketed_agg(splits).collect(), splits, True
-
-        if self.prebins == "auto":
-            # ONE upstream scan on the common path: the exact aggregate is
-            # collected behind a LIMIT guard, unpersisted — when it returns
-            # <= MAX rows (the overwhelmingly common case) the result is
-            # complete and exact (reference-identical) and no cache was
-            # written for nothing. Only when the guard trips does the
-            # fallback persist the aggregate (so the rebucket + M/E
-            # collects fill and reuse one cache) and fold it into quantile
-            # buckets; that rare high-cardinality path pays the aggregate
-            # twice (probe + cache fill) plus the approxQuantile probe of
-            # df — the trade that keeps the fast path persist-free.
-            guard = self.AUTO_EXACT_MAX_GROUPS
-            stats_df = _exact_agg()
-            stats = stats_df.limit(guard + 1).collect()
-            if len(stats) <= guard:
-                return stats, None, False
-            stats_df = stats_df.persist()
-            splits = self._prebin_splits(
-                df, x_clean, k=self.config.default_prebins
-            )
-            if splits is not None:
-                stats = _rebucket_stats(stats_df, splits).collect()
-                stats += stats_df.filter(F.col("tag") != "C").collect()
-                stats_df.unpersist()
-                return stats, splits, True
-            # else: degenerate x (no finite interior quantiles) — the
-            # guard overflow can then only come from M/E tag rows
-            stats = stats_df.collect()
-            stats_df.unpersist()
-            return stats, None, False
-
-        splits = self._prebin_splits(df, x_clean)
-        if splits is not None:
-            return _bucketed_agg(splits).collect(), splits, True
-        work = df.withColumn("_mob_tag", tag)
-        stats = _suff_stats_agg(
-            work,
-            [F.col("_mob_tag").alias("tag"), xd.alias("gkey")],
-            y_eff,
-            nonfinite_y,
-            xd,
-            w,
-        ).collect()
-        return stats, None, False
 
     def _solve_from_stats(self, stats, prebinned, weighted=None) -> FittedBins:
         """Driver-side solve over collected (tag, gkey) sufficient-statistic
@@ -1591,13 +1588,13 @@ class SparkMonotonicBinner:
 
 
 class GroupedBins:
-    """Per-group fitted models (e.g. one per ``source``) with a single
-    broadcast lookup transform.
+    """Per-group fitted models (e.g. one per ``source``) served by one
+    compiled lookup expression.
 
-    This is the north_star execution shape verbatim: "per-source
-    bin-boundary fitting runs as partition-parallel candidate-bin statistics
-    aggregated via treeAggregate-style DataFrame rollup, then a bounded
-    driver-side monotone merge pass broadcasts final cut-points".
+    Fitting them is the per-source execution shape: partition-parallel
+    candidate-bin statistics from one ``groupBy(group, tag, gkey)``
+    aggregate, then a bounded driver-side monotone merge per group; the
+    final cut points compile into the transform's single expression.
     """
 
     def __init__(
@@ -1699,10 +1696,10 @@ def fit_binners_per_group(
 
     Plan: a single ``groupBy(group, tag, gkey)`` aggregation produces the
     candidate-bin sufficient statistics for every group simultaneously
-    (plus one tiny pass for per-group binary detection and, when ``prebins``
-    is set, one approxQuantile pass for shared split points). The driver
-    then solves PAVA+merge per group over k-row slices — milliseconds per
-    group regardless of input size.
+    (plus, when pre-binning is active, one approxQuantile pass for shared
+    split points). The driver then detects binary targets and solves
+    PAVA+merge per group over k-row slices of the collected stats —
+    milliseconds per group regardless of input size.
 
     When pre-binning is active (``"auto"`` resolving high-cardinality, or an
     explicit int) the quantile split points are GLOBAL — shared across all
@@ -1714,165 +1711,12 @@ def fit_binners_per_group(
         x, y, prebins=prebins, prebin_relative_error=prebin_relative_error,
         config=config, **binner_kwargs,
     )
-    stats, _splits, prebinned = _collect_group_stats_rows(
-        tmpl, df, group_col
-    )
+    stats, splits = _collect_stats_rows(tmpl, df, group_col)
     return _solve_groups(
-        stats, prebinned, group_col, x, y,
+        stats, splits is not None, group_col, x, y,
         prebins=prebins, prebin_relative_error=prebin_relative_error,
         config=config, **binner_kwargs,
     )
-
-
-def _collect_group_stats_rows(
-    tmpl: SparkMonotonicBinner,
-    df: DataFrame,
-    group_col: str,
-    frozen_splits=_UNSET,
-):
-    """Weight-validating wrapper over the raw grouped collector (same
-    contract as SparkMonotonicBinner._collect_stats_rows)."""
-    stats, splits, prebinned = _collect_group_stats_rows_raw(
-        tmpl, df, group_col, frozen_splits
-    )
-    if tmpl.weight_col is not None:
-        bad = sum(int(r["n_bad_w"] or 0) for r in stats)
-        if bad > 0:
-            raise DataError(
-                f"weight column '{tmpl.weight_col}' has {bad} "
-                f"null/negative/non-finite values"
-            )
-        stats = [r for r in stats if (r["n_rows"] or 0) > 0]
-    return stats, splits, prebinned
-
-
-def _collect_group_stats_rows_raw(
-    tmpl: SparkMonotonicBinner,
-    df: DataFrame,
-    group_col: str,
-    frozen_splits=_UNSET,
-):
-    """Per-group sibling of ``_collect_stats_rows``: ONE
-    groupBy(group, tag, gkey) scan for every group's candidate-bin
-    statistics. Returns ``(stats_rows, splits, prebinned)``; rows carry
-    the group value in ``_g``."""
-    x, y = tmpl.x, tmpl.y
-    x_clean, x_missing, x_excluded, y_val = tmpl._predicates(df)
-    gcol = F.col(group_col)
-    if tmpl.weight_col is not None:
-        _check_numeric(df, tmpl.weight_col)
-        w = F.col(tmpl.weight_col).cast("double")
-    else:
-        w = None
-
-    # per-group binary detection + recode happen driver-side on the
-    # collected stats (_detect_binary_from_stats) — the per-group fit is
-    # ONE full scan for all groups (plus the shared approxQuantile pass
-    # when prebinning)
-    y_eff = y_val
-
-    tag = (
-        F.when(x_missing, F.lit("M"))
-        .when(x_excluded, F.lit("E"))
-        .otherwise(F.lit("C"))
-    )
-    xd = F.col(x).cast("double")
-    nonfinite_y = F.when(
-        y_val.isNotNull() & (F.abs(y_val) == F.lit(float("inf"))), 1
-    ).otherwise(0)
-
-    def _exact_agg() -> DataFrame:
-        work = df.withColumn("_mob_tag", tag)
-        return _suff_stats_agg(
-            work,
-            [gcol.alias("_g"), F.col("_mob_tag").alias("tag"), xd.alias("gkey")],
-            y_eff,
-            nonfinite_y,
-            xd,
-            w,
-        )
-
-    def _bucketed_agg(splits: List[float]) -> DataFrame:
-        from pyspark.ml.feature import Bucketizer
-
-        work = df.withColumn("_mob_tag", tag).withColumn(
-            "_mob_xb", F.when(x_clean, xd)
-        )
-        work = Bucketizer(
-            splits=splits, inputCol="_mob_xb", outputCol="_mob_bucket",
-            handleInvalid="keep",
-        ).transform(work)
-        group_key = F.when(
-            F.col("_mob_tag") == "C", F.col("_mob_bucket")
-        ).otherwise(xd)
-        return _suff_stats_agg(
-            work,
-            [gcol.alias("_g"), F.col("_mob_tag").alias("tag"),
-             group_key.alias("gkey")],
-            y_eff,
-            nonfinite_y,
-            xd,
-            w,
-        )
-
-    if frozen_splits is not _UNSET:
-        if frozen_splits is None:
-            if tmpl.prebins == "auto":
-                guard = tmpl.AUTO_EXACT_MAX_GROUPS
-                stats = _exact_agg().limit(guard + 1).collect()
-                if len(stats) > guard:
-                    raise DataError(
-                        f"incremental partition exceeds {guard} total "
-                        f"(group, x) cells but the prior grouped stats "
-                        f"were collected exactly; refit from scratch "
-                        f"with an integer prebins policy"
-                    )
-            else:
-                stats = _exact_agg().collect()
-            return stats, None, False
-        splits = [float(s) for s in frozen_splits]
-        return _bucketed_agg(splits).collect(), splits, True
-
-    if tmpl.prebins == "auto":
-        # same persist-free guarded-collect policy as the single fit: the
-        # LIMIT probe alone serves the (common) low-cardinality case,
-        # bounding the TOTAL (all-groups) collect size; only a tripped
-        # guard persists for the fallback's rebucket + M/E collects (which
-        # are bounded by n_groups * default_prebins rows)
-        guard = tmpl.AUTO_EXACT_MAX_GROUPS
-        stats_df = _exact_agg()
-        stats = stats_df.limit(guard + 1).collect()
-        if len(stats) <= guard:
-            return stats, None, False
-        stats_df = stats_df.persist()
-        splits = tmpl._prebin_splits(
-            df, x_clean, k=tmpl.config.default_prebins
-        )
-        if splits is not None:
-            stats = _rebucket_stats(
-                stats_df, splits, extra_keys=("_g",)
-            ).collect()
-            stats += stats_df.filter(F.col("tag") != "C").collect()
-            stats_df.unpersist()
-            return stats, splits, True
-        stats = stats_df.collect()
-        stats_df.unpersist()
-        return stats, None, False
-
-    splits = tmpl._prebin_splits(df, x_clean)
-    if splits is not None:
-        return _bucketed_agg(splits).collect(), splits, True
-    work = df.withColumn("_mob_tag", tag)
-    stats = _suff_stats_agg(
-        work,
-        [gcol.alias("_g"), F.col("_mob_tag").alias("tag"),
-         xd.alias("gkey")],
-        y_eff,
-        nonfinite_y,
-        xd,
-        w,
-    ).collect()
-    return stats, None, False
 
 
 def _solve_groups(
@@ -1941,46 +1785,7 @@ def collect_group_stats(
         x, y, prebins=prebins, prebin_relative_error=prebin_relative_error,
         config=config, **binner_kwargs,
     )
-    if prior is not None:
-        if prior.weight_col != tmpl.weight_col:
-            raise ValueError(
-                f"prior stats were weighted by {prior.weight_col!r}, "
-                f"collector weights by {tmpl.weight_col!r}"
-            )
-        stats, splits, _ = _collect_group_stats_rows(
-            tmpl, df, group_col, frozen_splits=prior.splits
-        )
-    else:
-        stats, splits, _ = _collect_group_stats_rows(tmpl, df, group_col)
-    rows = [
-        dict(r.asDict()) if hasattr(r, "asDict") else dict(r)
-        for r in stats
-    ]
-    names = {"C": "n_clean", "M": "n_missing", "E": "n_excluded"}
-    entry: Dict[str, Any] = {
-        "label": label,
-        "n_clean": 0,
-        "n_missing": 0,
-        "n_excluded": 0,
-        "n_groups": len({r["_g"] for r in rows}),
-    }
-    for r in rows:
-        entry[names[r["tag"]]] += _count_val(r["n_rows"])
-    for k in names.values():
-        entry[k] = _count_val(entry[k])
-    part = BinStats(
-        x=x,
-        y=y,
-        splits=splits,
-        exclude_values=(
-            list(tmpl.exclude_values) if tmpl.exclude_values else None
-        ),
-        rows=rows,
-        lineage=[entry],
-        group_col=group_col,
-        weight_col=tmpl.weight_col,
-    )
-    return prior.merge(part) if prior is not None else part
+    return _stats_artifact(tmpl, df, group_col, prior, label)
 
 
 def fit_groups_from_stats(
@@ -1997,17 +1802,11 @@ def fit_groups_from_stats(
         raise ValueError(
             "artifact is ungrouped; use SparkMonotonicBinner.fit_from_stats"
         )
-    ev = binner_kwargs.get("exclude_values")
-    if (list(ev) if ev else None) != (stats.exclude_values or None):
-        raise ValueError(
-            "stats were collected under different exclude_values than "
-            "requested — Excluded partitions would disagree"
-        )
-    if binner_kwargs.get("weight_col") != stats.weight_col:
-        raise ValueError(
-            f"stats were weighted by {stats.weight_col!r}, solve "
-            f"requested weight_col={binner_kwargs.get('weight_col')!r}"
-        )
+    _check_artifact(
+        stats,
+        binner_kwargs.get("exclude_values"),
+        binner_kwargs.get("weight_col"),
+    )
     return _solve_groups(
         stats.rows, stats.splits is not None, stats.group_col,
         stats.x, stats.y,

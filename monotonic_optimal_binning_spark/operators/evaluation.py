@@ -42,13 +42,10 @@ def _bucketize(score, cuts: Sequence[float]):
     cuts[i-1] <= score < cuts[i]; scores below cuts[0] -> 0,
     >= cuts[-1] -> len(cuts); NULL scores -> -1 (their own bucket)."""
     expr = F.when(score.isNull(), F.lit(-1))
-    prev = None
     for i, c in enumerate(cuts):
-        expr = expr.when(score < F.lit(float(c)), F.lit(i))
-        prev = c
         if i and float(c) <= float(cuts[i - 1]):
             raise ValueError("cuts must be strictly increasing")
-    _ = prev
+        expr = expr.when(score < F.lit(float(c)), F.lit(i))
     return expr.otherwise(F.lit(len(cuts)))
 
 

@@ -46,18 +46,9 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-
-def _bucket_expr(col: str, cuts: Sequence[float]) -> Column:
-    """0-based bucket index for interior cut points (right-open intervals);
-    NULL → -1 (missing bucket). Pure CASE chain — whole-stage codegen."""
-    expr = F.lit(len(cuts))  # above the last cut
-    for i in range(len(cuts) - 1, -1, -1):
-        expr = F.when(F.col(col) < F.lit(float(cuts[i])), F.lit(i)).otherwise(
-            expr
-        )
-    return F.when(F.col(col).isNull(), F.lit(-1)).otherwise(expr)
+from .evaluation import _bucketize
 
 
 def quantile_cuts(
@@ -148,7 +139,7 @@ def iv_screen(
     entries = [
         F.struct(
             F.lit(f).alias("feature"),
-            _bucket_expr(f, cuts[f]).alias("bucket"),
+            _bucketize(F.col(f), cuts[f]).alias("bucket"),
             F.lit(None).cast("string").alias("cat"),
         )
         for f in features

@@ -129,6 +129,15 @@ def test_errors(toy):
         iv_screen(toy, ["a"], "y", cuts={"b": [1.0]})
 
 
+@pytest.mark.parametrize("bad", [[50.0, 50.0], [60.0, 40.0]])
+def test_non_increasing_cuts_rejected(toy, bad):
+    """iv_screen buckets with the same index builder as gains_table and
+    calibration_table, so it refuses cuts that are not strictly
+    increasing the same way."""
+    with pytest.raises(ValueError, match="strictly increasing"):
+        iv_screen(toy, ["a", "b"], "y", cuts={"a": bad, "b": [0.5]})
+
+
 def _truth_iv_cat(pdf, col, smoothing=0.5):
     """Ground truth for a categorical feature: one bucket per category
     (null → its own bucket), IV via the core woe_iv kernel."""
