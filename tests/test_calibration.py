@@ -414,3 +414,66 @@ def test_nan_group_key_dropped(spark):
     keys = list(cal.models)
     assert len(keys) == 2
     assert not any(np.isnan(k) for k in keys)
+
+
+# ------------------------------- single form == one-group grouped form ----
+
+
+@pytest.fixture(scope="module")
+def many_scores(spark):
+    rng = np.random.RandomState(33)
+    n = 6000
+    score = np.round(rng.normal(size=n), 4)  # > 1024 distinct scores
+    y = (rng.uniform(size=n) < 1 / (1 + np.exp(-score))).astype("float64")
+    pdf = pd.DataFrame(
+        {"score": score, "y": y, "w": rng.randint(1, 4, n).astype("float64")}
+    )
+    pdf.loc[pdf.index % 29 == 0, "score"] = np.nan
+    return spark.createDataFrame(pdf).repartition(8).withColumn(
+        "k", F.lit(0)
+    )
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"prebins": "exact"},
+        {"prebins": 16},
+        {},  # auto: the probe sees > 1024 distinct scores and prebins
+        {"prebins": "exact", "weight_col": "w"},
+    ],
+    ids=["exact", "int", "auto", "weighted"],
+)
+def test_single_fit_equals_one_group_fit(many_scores, kw):
+    from monotonic_optimal_binning_spark.operators.calibration import (
+        isotonic_calibrate_grouped,
+    )
+
+    single = isotonic_calibrate(many_scores, "score", "y", **kw)
+    grouped = isotonic_calibrate_grouped(many_scores, "score", "y", "k", **kw)
+    assert list(grouped.models) == [0]
+    one = grouped.models[0]
+    np.testing.assert_array_equal(one.bounds, single.bounds)
+    np.testing.assert_array_equal(one.values, single.values)
+    if kw.get("prebins") == "exact":
+        assert single.cuts is None and one.cuts is None
+    else:
+        assert single.cuts is not None and len(single.cuts) > 1
+        np.testing.assert_array_equal(one.cuts, single.cuts)
+    assert one.cut_sentinel == single.cut_sentinel
+    assert one.resolved_sign == single.resolved_sign
+    assert one.n_groups == single.n_groups
+
+
+def test_isotonic_empty_input(many_scores):
+    """No clean row: the single fit raises (PAVA has no group to pool);
+    the grouped fit has no group to fit."""
+    from monotonic_optimal_binning_spark.exceptions import DataError
+    from monotonic_optimal_binning_spark.operators.calibration import (
+        isotonic_calibrate_grouped,
+    )
+
+    empty = many_scores.limit(0)
+    with pytest.raises(DataError, match="No groups"):
+        isotonic_calibrate(empty, "score", "y")
+    assert isotonic_calibrate_grouped(empty, "score", "y", "k").models == {}

@@ -276,3 +276,45 @@ def test_weighted_psi_zero_mass_bucket_vanishes(spark):
     np.testing.assert_allclose(
         got["psi_term"].to_numpy(), truth["psi_term"].to_numpy()
     )
+
+
+@pytest.mark.parametrize("weighted", [False, True], ids=["counts", "weights"])
+def test_model_psi_equals_one_group_grouped_model_psi(spark, weighted):
+    """model_psi is grouped_model_psi over a one-group GroupedBins, with
+    the group column dropped — also where the shifted sample leaves
+    fitted bins empty."""
+    from monotonic_optimal_binning_spark import fit_binners_per_group
+    from monotonic_optimal_binning_spark.operators.drift import (
+        grouped_model_psi,
+        model_psi,
+    )
+
+    df = spark.range(20_000).select(
+        F.lit("a").alias("g"),
+        (F.col("id") % 30).cast("double").alias("x"),
+        (F.pmod(F.xxhash64("id"), 100) < F.col("id") % 30 + 20)
+        .cast("int").alias("y"),
+        (F.col("id") % 3 + 1).cast("double").alias("w"),
+    )
+    grouped = fit_binners_per_group(
+        df, "g", "x", "y",
+        constraints=BinningConstraints(max_bins=5, min_bins=3),
+    )
+    assert list(grouped.models) == ["a"]
+    shifted = df.filter(F.col("x") < 8)  # the upper bins see no row
+    wc = "w" if weighted else None
+    single = model_psi(grouped.models["a"], shifted, weight_col=wc)
+    multi = grouped_model_psi(grouped, shifted, weight_col=wc)
+    cols = ["bucket", "n_expected", "n_actual", "pct_expected",
+            "pct_actual", "psi_term"]
+    assert single.columns == cols
+    assert multi.columns == ["g"] + cols
+    s = single.toPandas().sort_values("bucket").reset_index(drop=True)
+    m = multi.toPandas().sort_values("bucket").reset_index(drop=True)
+    assert (m["g"] == "a").all()
+    assert (s["n_actual"] == 0).any()
+    assert s["bucket"].tolist() == m["bucket"].tolist()
+    for c in cols[1:]:
+        np.testing.assert_allclose(
+            m[c].astype(float), s[c].astype(float), rtol=1e-12, err_msg=c
+        )

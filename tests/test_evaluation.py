@@ -368,3 +368,49 @@ def test_prebins_validation(scored):
         ks_auc(df, "score", "y", prebins="bogus")
     with pytest.raises(ValueError, match="prebins"):
         ks_auc_grouped(df, "score", "y", "y", prebins="bogus")
+
+
+# ------------------------------- single form == one-key grouped form ----
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"prebins": "exact"},
+        {"cuts": [-1.0, -0.2, 0.4, 1.0, 2.1]},
+        # ~60 distinct scores > max_distinct: the auto quantile grid engages
+        {"max_distinct": 10, "auto_buckets": 16},
+        {"weight_col": "w"},
+    ],
+    ids=["exact", "cuts", "auto_bucketed", "weighted"],
+)
+def test_ks_auc_equals_one_key_grouped(scored, kw):
+    """ks_auc is ks_auc_grouped over a constant key: same row, same
+    values, the key column dropped."""
+    df, _ = scored
+    df = df.withColumn(
+        "w", (F.pmod(F.hash("score", "y"), F.lit(3)) + 1).cast("double")
+    ).withColumn("k", F.lit("all"))
+    single = ks_auc(df, "score", "y", **kw)
+    grouped = ks_auc_grouped(df, "score", "y", "k", **kw)
+    assert single.columns == ["ks", "auc", "n_pos", "n_neg"]
+    assert grouped.columns == ["k", "ks", "auc", "n_pos", "n_neg"]
+    (s,) = single.collect()
+    (g,) = grouped.collect()
+    assert g["k"] == "all"
+    assert g["n_pos"] == s["n_pos"] and g["n_neg"] == s["n_neg"]
+    assert g["ks"] == pytest.approx(s["ks"], rel=1e-12, abs=1e-15)
+    assert g["auc"] == pytest.approx(s["auc"], rel=1e-12, abs=1e-15)
+
+
+def test_ks_auc_empty_input(scored):
+    """No labelled, scored row: ks_auc is one all-NULL row (a global
+    aggregate over nothing); the grouped form has no group to report."""
+    df, _ = scored
+    empty = df.limit(0)
+    assert [tuple(r) for r in ks_auc(empty, "score", "y").collect()] == [
+        (None, None, None, None)
+    ]
+    assert ks_auc_grouped(
+        empty.withColumn("k", F.lit(1)), "score", "y", "k"
+    ).collect() == []

@@ -565,3 +565,33 @@ def test_serving_paths_plan_no_python(spark):
         plan = plan_of(df, "simple")
         assert "ArrowEvalPython" not in plan, label
         assert "BatchEvalPython" not in plan, label
+
+
+def test_simhash_banded_pairs_filters_hamming_before_dedup(spark, monkeypatch):
+    """simhash_banded_pairs carries the fingerprint through the banded
+    self-join, so the Hamming predicate (a Filter that Catalyst folds
+    into the join condition) runs BELOW the dropDuplicates aggregate.
+    The ids-only join -> dropDuplicates -> fingerprint re-join -> filter
+    shape shuffles and sorts every raw candidate pair first; it must
+    not come back."""
+    import monotonic_optimal_binning_spark.plans.checkpoint as checkpoint
+    from monotonic_optimal_binning_spark.operators.dedup import (
+        simhash_banded_pairs,
+    )
+
+    # the operator truncates lineage eagerly; keep the planned frame
+    monkeypatch.setattr(checkpoint, "truncate_lineage", lambda df, *a, **k: df)
+    df = spark.createDataFrame(
+        pd.DataFrame({"vid": range(40), "fp": [i * 7 for i in range(40)]})
+    )
+    out = simhash_banded_pairs(df, "fp", "vid", max_hamming=3)
+    lines = plan_of(out, "simple").splitlines()
+    dedup = [i for i, ln in enumerate(lines) if "HashAggregate(keys=[id_a" in ln]
+    hamming = [
+        i for i, ln in enumerate(lines)
+        if re.search(r"bit_count\(.*\) <= 3", ln)
+    ]
+    assert len(dedup) == 2 and hamming, "\n".join(lines)
+    # children print below their parents: the predicate sits under both
+    # halves of the dedup aggregate
+    assert min(hamming) > max(dedup), "\n".join(lines)
