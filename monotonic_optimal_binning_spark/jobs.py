@@ -25,6 +25,7 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from .artifacts import save_json
 from .core.constraints import BinningConstraints
 from .functions.timeutil import pin_utc
 from .operators.asof import asof_join
@@ -209,8 +210,7 @@ def fit_woe_job(args) -> None:
         partition_by = None
 
     os.makedirs(args.workdir, exist_ok=True)
-    with open(os.path.join(args.workdir, "cut_points.json"), "w") as f:
-        json.dump(cut_points, f, indent=2, allow_nan=False)
+    save_json(cut_points, os.path.join(args.workdir, "cut_points.json"))
     # full serving artifact alongside the cut-point digest: this is what
     # the `drift` subcommand scores new slices against (and what
     # FittedBins/GroupedBins.load_json serves lookups from)
@@ -241,13 +241,6 @@ def _woe_shift_vs(old_model, new_model):
     except ValueError:
         return None
     return round(float(t.attrs["max_abs_woe_delta"]), 9)
-
-
-def _atomic_json_save(obj, path: str) -> None:
-    """Write-then-rename so a killed job never leaves a torn artifact."""
-    tmp = path + ".tmp"
-    obj.save_json(tmp)
-    os.replace(tmp, path)
 
 
 def fit_incremental_job(args) -> None:
@@ -315,7 +308,7 @@ def fit_incremental_job(args) -> None:
                 exclude_values=args.exclude_values,
                 weight_col=weight_col,
             )
-            _atomic_json_save(stats, stats_path)
+            stats.save_json(stats_path)
         grouped = fit_groups_from_stats(
             stats, prebins=args.prebins, constraints=constraints,
             exclude_values=args.exclude_values,
@@ -331,7 +324,7 @@ def fit_incremental_job(args) -> None:
                 for g, m in grouped.items()
                 if g in prev.models
             }
-        _atomic_json_save(grouped, model_path)
+        grouped.save_json(model_path)
         per_group = {
             str(g): {
                 "n_bins": len(m.labels),
@@ -355,7 +348,7 @@ def fit_incremental_job(args) -> None:
         else:
             df = _read_input(spark, args.input, getattr(args, "input_format", None), getattr(args, "input_options", None))
             stats = binner.collect_stats(df, prior=prior, label=label)
-            _atomic_json_save(stats, stats_path)
+            stats.save_json(stats_path)
         binner.fit_from_stats(stats)
         shift = None
         if os.path.exists(model_path):
@@ -364,7 +357,7 @@ def fit_incremental_job(args) -> None:
             shift = _woe_shift_vs(
                 FittedBins.load_json(model_path), binner.model_
             )
-        _atomic_json_save(binner.model_, model_path)
+        binner.model_.save_json(model_path)
         m = binner.model_
         report = {
             "n_bins": len(m.labels),
@@ -1348,10 +1341,9 @@ def ann_job(args) -> None:
             corpus, corpus_vec=args.vec_col, n_cells=args.n_cells,
             seed=args.seed, train_fraction=args.train_fraction,
         )
-        # atomic publish (write_manifest pattern): a killed job never
-        # leaves a half-written codebook to poison the resume path
-        cb.save_json(cb_path + ".tmp")
-        os.replace(cb_path + ".tmp", cb_path)
+        # save_json publishes atomically: a killed job never leaves a
+        # half-written codebook to poison the resume path
+        cb.save_json(cb_path)
     codebook = IVFCodebook.load_json(cb_path)
 
     out_dir = os.path.join(args.workdir, "stage_topk")

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import artifacts
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..core.blocks import Block
 from ..core.constraints import BinningConstraints
@@ -446,18 +447,11 @@ class FittedBins:
         )
 
     def save_json(self, path: str) -> None:
-        import json
-
-        with open(path, "w") as f:
-            # allow_nan=False asserts the strict-JSON guarantee at write time
-            json.dump(self.to_dict(), f, indent=2, allow_nan=False)
+        artifacts.save_json(self.to_dict(), path)
 
     @classmethod
     def load_json(cls, path: str) -> "FittedBins":
-        import json
-
-        with open(path) as f:
-            return cls.from_dict(json.load(f))
+        return cls.from_dict(artifacts.load_json(path))
 
     def _bin_index(self, fvals: np.ndarray) -> np.ndarray:
         """Bin of each float value: ``searchsorted`` over the right edges,
@@ -856,17 +850,11 @@ class BinStats:
         )
 
     def save_json(self, path: str) -> None:
-        import json
-
-        with open(path, "w") as fh:
-            json.dump(self.to_dict(), fh, indent=2, allow_nan=False)
+        artifacts.save_json(self.to_dict(), path)
 
     @classmethod
     def load_json(cls, path: str) -> "BinStats":
-        import json
-
-        with open(path) as fh:
-            return cls.from_dict(json.load(fh))
+        return cls.from_dict(artifacts.load_json(path))
 
     # ---------- introspection ----------
 
@@ -1622,8 +1610,6 @@ class GroupedBins:
 
     def save_json(self, path: str) -> None:
         """Persist all per-group models (broadcastable serving artifact)."""
-        import json
-
         payload = {
             "group_col": self.group_col,
             "x": self.x,
@@ -1632,15 +1618,11 @@ class GroupedBins:
                 self.models.items(), key=lambda kv: str(kv[0])
             )],
         }
-        with open(path, "w") as f:
-            json.dump(payload, f, allow_nan=False)
+        artifacts.save_json(payload, path, indent=None)
 
     @classmethod
     def load_json(cls, path: str) -> "GroupedBins":
-        import json
-
-        with open(path) as f:
-            d = json.load(f)
+        d = artifacts.load_json(path)
         models = {g: FittedBins.from_dict(md) for g, md in d["models"]}
         return cls(d["group_col"], d["x"], d["y"], models)
 

@@ -10,9 +10,9 @@ score mean what it says. Two standard tools:
   pool-adjacent-violators pass runs driver-side on the k collected rows
   (:mod:`..core.pava` — the same kernel the monotone binner uses, cited
   to /root/reference/src/MOBPY/core/pava.py:358-406), and serving is a
-  compiled step-function lookup.  Like the binner, a cheap
-  ``approx_count_distinct`` probe keeps the driver collect bounded:
-  high-cardinality raw scores are quantile-prebinned first.
+  compiled step-function lookup.  A cheap ``approx_count_distinct``
+  probe keeps the driver collect bounded: high-cardinality raw scores
+  are quantile-prebinned first.
 
 - :func:`calibration_table`: the reliability diagram's data — per fixed
   score bucket, predicted-vs-observed rate and the bucket's weighted
@@ -22,8 +22,6 @@ score mean what it says. Two standard tools:
 
 from __future__ import annotations
 
-import json
-import os
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
@@ -32,6 +30,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .. import artifacts
 from ..core.pava import GroupStats, fit_pava
 from ..functions.lookup import dispatch, name, serve_sql, step_sql, tabulate
 from .evaluation import _bucketize
@@ -137,15 +136,11 @@ class IsotonicCalibration:
         )
 
     def save_json(self, path: str) -> None:
-        tmp = f"{path}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.to_dict(), f, indent=2, allow_nan=False)
-        os.replace(tmp, path)
+        artifacts.save_json(self.to_dict(), path)
 
     @classmethod
     def load_json(cls, path: str) -> "IsotonicCalibration":
-        with open(path) as f:
-            return cls.from_dict(json.load(f))
+        return cls.from_dict(artifacts.load_json(path))
 
 
 #: "auto" collects exact distinct scores up to this many groups; above,
@@ -217,40 +212,85 @@ def isotonic_calibrate(
     points come from the UNWEIGHTED score distribution (approxQuantile
     has no frequency arg), so bucket granularity — not the weighted block
     means within buckets — can differ from the replicated fit.
+    With no clean row the PAVA solve raises ``DataError``.
     """
+    return _iso_fit(
+        df, score_col, y_col, where="isotonic_calibrate", sign=sign,
+        strict=strict, prebins=prebins,
+        prebin_relative_error=prebin_relative_error, weight_col=weight_col,
+    )[None]
+
+
+def _iso_fit(
+    df: DataFrame,
+    score_col: str,
+    y_col: str,
+    group_col: Optional[str] = None,
+    *,
+    where: str,
+    max_collect: Optional[int] = None,
+    sign: str,
+    strict: bool,
+    prebins: object,
+    prebin_relative_error: float,
+    weight_col: Optional[str],
+) -> dict:
+    """One ``groupBy([group,] score)`` scan, then a driver-side PAVA solve
+    per group: ``{group value: IsotonicCalibration}``. Without
+    ``group_col`` every clean row is the one group ``None``, solved even
+    when empty. ``max_collect`` bounds the collected stat rows (None:
+    unbounded)."""
     s = F.col(score_col).cast("double")
     y = F.col(y_col).cast("double")
     # NaN is not null: a parquet-borne NaN score/label passes isNotNull,
-    # poisons the PAVA block means, and (grouped twin) breaks the sorted
-    # precondition of the driver solve — NaN-as-missing, like the binner
+    # poisons the PAVA block means and breaks the sorted precondition of
+    # the driver solve — NaN-as-missing, like the binner
     clean = s.isNotNull() & y.isNotNull() & ~F.isnan(s) & ~F.isnan(y)
+    cols = [s.alias("__s"), y.alias("__y")]
+    keys = []
+    if group_col is not None:
+        g = F.col(group_col)
+        clean = clean & g.isNotNull()
+        # a float NaN group key would fan out into one dict entry per row
+        # (nan != nan); unknown groups serve NULL anyway
+        if dict(df.dtypes).get(group_col) in ("float", "double"):
+            clean = clean & ~F.isnan(g)
+        cols.insert(0, g.alias("__g"))
+        keys = ["__g"]
     if weight_col is not None:
         from .drift import _weight_expr
 
-        wv = _weight_expr(weight_col, "isotonic_calibrate")
-        base = df.filter(clean).select(
-            s.alias("__s"), y.alias("__y"), wv.alias("__w")
-        )
-    else:
-        base = df.filter(clean).select(s.alias("__s"), y.alias("__y"))
-
+        cols.append(_weight_expr(weight_col, where).alias("__w"))
     base, cuts_arr, sentinel = _apply_prebins(
-        base, prebins, prebin_relative_error
+        df.filter(clean).select(*cols), prebins, prebin_relative_error
     )
-
-    aggs = _iso_aggs(weight_col)
-    rows = base.groupBy("__s").agg(*aggs).orderBy("__s").collect()
-    if weight_col is not None:
-        rows = [r for r in rows if r["n"] > 0]
-    return _solve_iso(
-        rows, score_col, sign=sign, strict=strict,
-        cuts_arr=cuts_arr, sentinel=sentinel,
-    )
+    stats = base.groupBy(*keys, "__s").agg(*_iso_aggs(weight_col))
+    if max_collect is not None:
+        stats = stats.limit(max_collect + 1)
+    rows = stats.collect()
+    if max_collect is not None and len(rows) > max_collect:
+        raise ValueError(
+            f"{where}: > {max_collect} (group, score) "
+            f"stat rows; raise max_collect or coarsen prebins"
+        )
+    per_group: dict = {} if keys else {None: []}
+    for r in rows:
+        if weight_col is not None and not r["n"] > 0:
+            continue  # zero-weight-only score group carries no mass
+        per_group.setdefault(r["__g"] if keys else None, []).append(r)
+    return {
+        gv: _solve_iso(
+            sorted(grows, key=lambda r: r["__s"]), score_col,
+            sign=sign, strict=strict, cuts_arr=cuts_arr,
+            sentinel=sentinel,
+        )
+        for gv, grows in per_group.items()
+    }
 
 
 def _iso_aggs(weight_col: Optional[str]):
     """Per-distinct-score sufficient statistics (algebraic, map-side
-    combinable) shared by the global and grouped isotonic fits."""
+    combinable) of :func:`_iso_fit`."""
     if weight_col is not None:
         wc = F.col("__w")
         pos = wc > 0  # zero-weight rows define no extrema
@@ -275,8 +315,8 @@ def _iso_aggs(weight_col: Optional[str]):
 def _solve_iso(
     rows, score_col, *, sign, strict, cuts_arr, sentinel
 ) -> IsotonicCalibration:
-    """Driver-side PAVA solve over collected per-score stats rows
-    (must already be sorted by ``__s``)."""
+    """Driver-side PAVA solve over one group's collected per-score stats
+    rows (must already be sorted by ``__s``)."""
     groups = [
         GroupStats(
             x=float(r["__s"]),
@@ -359,15 +399,11 @@ class GroupedIsotonicCalibration:
         )
 
     def save_json(self, path: str) -> None:
-        tmp = f"{path}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.to_dict(), f, indent=2, allow_nan=False)
-        os.replace(tmp, path)
+        artifacts.save_json(self.to_dict(), path)
 
     @classmethod
     def load_json(cls, path: str) -> "GroupedIsotonicCalibration":
-        with open(path) as f:
-            return cls.from_dict(json.load(f))
+        return cls.from_dict(artifacts.load_json(path))
 
 
 def isotonic_calibrate_grouped(
@@ -398,57 +434,12 @@ def isotonic_calibrate_grouped(
     beyond it (raise the limit or coarsen ``prebins`` for extreme
     group × score cardinality).
     """
-    s = F.col(score_col).cast("double")
-    y = F.col(y_col).cast("double")
-    g = F.col(group_col)
-    cols = [g.alias("__g"), s.alias("__s"), y.alias("__y")]
-    if weight_col is not None:
-        from .drift import _weight_expr
-
-        cols.append(
-            _weight_expr(weight_col, "isotonic_calibrate_grouped").alias(
-                "__w"
-            )
-        )
-    # same NaN-as-missing policy as the global fit (NaN passes isNotNull;
-    # a NaN __s key would defeat the driver-side sorted() precondition of
-    # _solve_iso nondeterministically); a float NaN group key would also
-    # fan out into one dict entry per row (nan != nan), so numeric group
-    # columns drop NaN keys — unknown groups serve NULL anyway
-    clean = (
-        s.isNotNull() & y.isNotNull() & g.isNotNull()
-        & ~F.isnan(s) & ~F.isnan(y)
+    models = _iso_fit(
+        df, score_col, y_col, group_col,
+        where="isotonic_calibrate_grouped", max_collect=max_collect,
+        sign=sign, strict=strict, prebins=prebins,
+        prebin_relative_error=prebin_relative_error, weight_col=weight_col,
     )
-    if dict(df.dtypes).get(group_col) in ("float", "double"):
-        clean = clean & ~F.isnan(g)
-    base = df.filter(clean).select(*cols)
-    base, cuts_arr, sentinel = _apply_prebins(
-        base, prebins, prebin_relative_error
-    )
-    rows = (
-        base.groupBy("__g", "__s")
-        .agg(*_iso_aggs(weight_col))
-        .limit(max_collect + 1)
-        .collect()
-    )
-    if len(rows) > max_collect:
-        raise ValueError(
-            f"isotonic_calibrate_grouped: > {max_collect} (group, score) "
-            f"stat rows; raise max_collect or coarsen prebins"
-        )
-    per_group: dict = {}
-    for r in rows:
-        if weight_col is not None and not r["n"] > 0:
-            continue  # zero-weight-only score group carries no mass
-        per_group.setdefault(r["__g"], []).append(r)
-    models = {
-        gv: _solve_iso(
-            sorted(grows, key=lambda r: r["__s"]), score_col,
-            sign=sign, strict=strict, cuts_arr=cuts_arr,
-            sentinel=sentinel,
-        )
-        for gv, grows in per_group.items()
-    }
     return GroupedIsotonicCalibration(
         group_col=group_col, score_col=score_col, models=models
     )

@@ -31,7 +31,6 @@ like :class:`operators.binning.FittedBins`.
 
 from __future__ import annotations
 
-import json
 import math
 from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional
@@ -40,6 +39,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import artifacts
 from ..functions.lookup import literal, name
 
 OTHER = "__other__"
@@ -104,13 +104,11 @@ class CatBins:
         return out
 
     def save_json(self, path: str) -> None:
-        with open(path, "w") as f:
-            json.dump(self.to_dict(), f, indent=2)
+        artifacts.save_json(self.to_dict(), path)
 
     @classmethod
     def load_json(cls, path: str) -> "CatBins":
-        with open(path) as f:
-            return cls.from_dict(json.load(f))
+        return cls.from_dict(artifacts.load_json(path))
 
     def _summary(self) -> pd.DataFrame:
         cats = list(self.woes)

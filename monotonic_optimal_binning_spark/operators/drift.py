@@ -10,15 +10,18 @@ no index); engine-new for production feature monitoring.
 Plan shape: each side collapses to one row per bin via an algebraic count
 (map-side combine), the two tiny per-bin tables full-outer-join on the
 bin label (null-safe: a null bucket present on both sides is ONE bin, not
-two phantom half-rows), and totals broadcast — the raw frames are each
-scanned once and never joined to each other.
+two phantom half-rows), and totals come from a window over the joined
+k-row table — the raw frames are each scanned once and never joined to
+each other. Every PSI here (sample vs sample, model, per group, per
+streaming window) goes through the one share/term kernel
+:func:`_psi_terms`.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -45,32 +48,22 @@ def bucket_counts(
     )
 
 
-def _psi_from_counts(
-    expected_counts: DataFrame, actual_counts: DataFrame, smoothing: float
-) -> DataFrame:
-    """Shared PSI kernel over two (bucket, n_*) tables: null-safe
-    full-outer join on the bucket label, broadcast totals, smoothed
-    shares, per-bucket psi_term."""
-    e = expected_counts.withColumnRenamed("bucket", "__be")
-    a = actual_counts.withColumnRenamed("bucket", "__ba")
-    j = e.join(a, on=F.col("__be").eqNullSafe(F.col("__ba")), how="full_outer").select(
-        F.coalesce("__be", "__ba").alias("bucket"),
-        F.coalesce("n_expected", F.lit(0)).alias("n_expected"),
-        F.coalesce("n_actual", F.lit(0)).alias("n_actual"),
-    )
-    tot = j.agg(
-        F.sum("n_expected").alias("te"),
-        F.sum("n_actual").alias("ta"),
-        F.count(F.lit(1)).alias("k"),
-    )
-    j = j.crossJoin(F.broadcast(tot))
+def _psi_terms(j: DataFrame, keys: Sequence[str], smoothing: float) -> DataFrame:
+    """Smoothed shares and the per-bucket PSI term of a ``(keys…, bucket,
+    n_expected, n_actual)`` frame, with totals and the bucket count k per
+    key (each key is its own pair of distributions). ``keys=()`` is one
+    pair over the whole frame. Output columns: the input's plus
+    ``pct_expected, pct_actual, psi_term``."""
+    w = Window.partitionBy(*keys)
+    k = F.count(F.lit(1)).over(w)
     pe = (F.col("n_expected") + smoothing) / (
-        F.col("te") + smoothing * F.col("k")
+        F.sum("n_expected").over(w) + smoothing * k
     )
     pa = (F.col("n_actual") + smoothing) / (
-        F.col("ta") + smoothing * F.col("k")
+        F.sum("n_actual").over(w) + smoothing * k
     )
     return j.select(
+        *keys,
         "bucket",
         "n_expected",
         "n_actual",
@@ -78,6 +71,31 @@ def _psi_from_counts(
         pa.alias("pct_actual"),
         ((pa - pe) * F.log(pa / pe)).alias("psi_term"),
     )
+
+
+def _psi_from_counts(
+    expected_counts: DataFrame,
+    actual_counts: DataFrame,
+    smoothing: float,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """PSI over two ``(keys…, bucket, n_*)`` tables: null-safe full-outer
+    join on the keys and the bucket label (a side missing a bucket counts
+    0 there), then :func:`_psi_terms`."""
+    on = [*keys, "bucket"]
+    e = expected_counts.select(
+        *[F.col(c).alias(f"__e_{c}") for c in on], "n_expected"
+    )
+    a = actual_counts.select(
+        *[F.col(c).alias(f"__a_{c}") for c in on], "n_actual"
+    )
+    cond = [F.col(f"__e_{c}").eqNullSafe(F.col(f"__a_{c}")) for c in on]
+    j = e.join(a, on=cond, how="full_outer").select(
+        *[F.coalesce(f"__e_{c}", f"__a_{c}").alias(c) for c in on],
+        F.coalesce("n_expected", F.lit(0)).alias("n_expected"),
+        F.coalesce("n_actual", F.lit(0)).alias("n_actual"),
+    )
+    return _psi_terms(j, keys, smoothing)
 
 
 def psi(
@@ -146,6 +164,26 @@ def _weight_expr(weight_col: str, where: str):
     ).otherwise(wc)
 
 
+def _fitted_bin_counts(labeled: DataFrame, keys, weight_col, where) -> DataFrame:
+    """``(keys…, bucket, n_actual)`` of an interval-labelled frame
+    (label in ``__bucket``): rows, or weight sums, per FITTED bin. A NULL
+    label (no model for the row's group) and the Missing/Excluded labels
+    are out of scope — see :func:`model_psi`."""
+    n = (
+        F.sum(_weight_expr(weight_col, where))
+        if weight_col is not None
+        else F.count(F.lit(1))
+    )
+    return (
+        labeled.filter(
+            F.col("__bucket").isNotNull()
+            & ~F.col("__bucket").rlike("Missing|Excluded")
+        )
+        .groupBy(*keys, F.col("__bucket").alias("bucket"))
+        .agg(n.alias("n_actual"))
+    )
+
+
 def model_psi(
     model,
     actual: DataFrame,
@@ -173,17 +211,9 @@ def model_psi(
         _train_counts(model), "bucket string, n_expected double"
     )
 
-    labeled = model.transform(actual, "interval", input_col or model.x, "__bucket").filter(
-        F.col("__bucket").isNotNull()
-        & ~F.col("__bucket").rlike("Missing|Excluded")
-    )
-    n_actual = (
-        F.sum(_weight_expr(weight_col, "model_psi"))
-        if weight_col is not None
-        else F.count(F.lit(1))
-    )
-    a = labeled.groupBy(F.col("__bucket").alias("bucket")).agg(
-        n_actual.alias("n_actual")
+    a = _fitted_bin_counts(
+        model.transform(actual, "interval", input_col or model.x, "__bucket"),
+        (), weight_col, "model_psi",
     )
     return _psi_from_counts(F.broadcast(e), a, smoothing)
 
@@ -231,57 +261,14 @@ def grouped_model_psi(
     ]
     spark = actual.sparkSession
     e = spark.createDataFrame(
-        rows, f"`{group_col}` string, __be string, n_expected double"
+        rows, f"`{group_col}` string, bucket string, n_expected double"
     )
-    labeled = grouped.transform(
-        actual, assign="interval",
-        input_col=input_col, group_col=group_col, output_col="__bucket",
-    ).filter(
-        F.col("__bucket").isNotNull()
-        & ~F.col("__bucket").rlike("Missing|Excluded")
+    a = _fitted_bin_counts(
+        grouped.transform(
+            actual, assign="interval",
+            input_col=input_col, group_col=group_col, output_col="__bucket",
+        ),
+        (F.col(group_col).cast("string").alias(group_col),),
+        weight_col, "grouped_model_psi",
     )
-    n_actual = (
-        F.sum(_weight_expr(weight_col, "grouped_model_psi"))
-        if weight_col is not None
-        else F.count(F.lit(1))
-    )
-    a = labeled.groupBy(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col("__bucket").alias("__ba"),
-    ).agg(n_actual.alias("n_actual"))
-    j = (
-        e.withColumnRenamed(group_col, "__ge")
-        .join(
-            a.withColumnRenamed(group_col, "__ga"),
-            on=(F.col("__ge") == F.col("__ga"))
-            & F.col("__be").eqNullSafe(F.col("__ba")),
-            how="full_outer",
-        )
-        .select(
-            F.coalesce("__ge", "__ga").alias(group_col),
-            F.coalesce("__be", "__ba").alias("bucket"),
-            F.coalesce("n_expected", F.lit(0)).alias("n_expected"),
-            F.coalesce("n_actual", F.lit(0)).alias("n_actual"),
-        )
-    )
-    tot = j.groupBy(group_col).agg(
-        F.sum("n_expected").alias("te"),
-        F.sum("n_actual").alias("ta"),
-        F.count(F.lit(1)).alias("k"),
-    )
-    j = j.join(F.broadcast(tot), on=group_col)
-    pe = (F.col("n_expected") + smoothing) / (
-        F.col("te") + smoothing * F.col("k")
-    )
-    pa = (F.col("n_actual") + smoothing) / (
-        F.col("ta") + smoothing * F.col("k")
-    )
-    return j.select(
-        group_col,
-        "bucket",
-        "n_expected",
-        "n_actual",
-        pe.alias("pct_expected"),
-        pa.alias("pct_actual"),
-        ((pa - pe) * F.log(pa / pe)).alias("psi_term"),
-    )
+    return _psi_from_counts(F.broadcast(e), a, smoothing, keys=(group_col,))

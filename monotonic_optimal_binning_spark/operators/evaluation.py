@@ -57,9 +57,8 @@ def _auto_cuts(
     n_buckets: int,
     rel_err: float = 1e-4,
 ):
-    """Scale guard for ``cuts=None`` (the binner's ``prebins="auto"``
-    policy, CLAUDE.md): probe distinct-score cardinality with
-    ``approx_count_distinct`` (one cheap action) and, above
+    """Scale guard for ``cuts=None``: probe distinct-score cardinality
+    with ``approx_count_distinct`` (one cheap action) and, above
     ``max_distinct``, derive quantile cut points so the single-partition
     ordered prefix frame is bounded at any input scale. Returns ``None``
     when the exact distinct-score path is already safe."""
@@ -183,6 +182,92 @@ def gains_table(
     return out.orderBy(F.col("bucket") == -1, order)
 
 
+def _ks_auc(
+    df: DataFrame,
+    score_col: str,
+    y_col: str,
+    keys: Sequence[str],
+    *,
+    where: str,
+    cuts: Optional[Sequence[float]],
+    weight_col: Optional[str],
+    prebins: str,
+    max_distinct: int,
+    auto_buckets: int,
+) -> DataFrame:
+    """KS + AUC per distinct value of the ``keys`` columns: one
+    ``groupBy(keys, score)`` scan, prefix windows partitioned by the keys,
+    one row per key. With ``keys=()`` the windows span the whole
+    (bounded) distinct-score frame and the result is one row."""
+    if prebins not in ("auto", "exact"):
+        raise ValueError("prebins must be 'auto' or 'exact'")
+    y = F.col(y_col).cast("double")
+    s = F.col(score_col).cast("double")
+    base = df.filter(s.isNotNull() & y.isNotNull())
+    if cuts is None and prebins == "auto":
+        cuts = _auto_cuts(
+            base, s, max_distinct=max_distinct, n_buckets=auto_buckets
+        )
+    kn = [f"__k{i}" for i in range(len(keys))]
+    cols = [F.col(c).alias(k) for c, k in zip(keys, kn)]
+    cols += [(_bucketize(s, cuts) if cuts else s).alias("s"), y.alias("__y")]
+    if weight_col is not None:
+        from .drift import _weight_expr
+
+        cols.append(_weight_expr(weight_col, where).alias("__w"))
+        pos_w = F.when(F.col("__w") > 0, F.col("__w"))
+        agg = (
+            base.select(*cols)
+            .groupBy(*kn, "s")
+            .agg(
+                F.sum(pos_w * F.col("__y")).alias("pos"),
+                F.sum(pos_w * (1 - F.col("__y"))).alias("neg"),
+            )
+            # zero-weight-only score groups carry no mass (and 0 * NaN
+            # label would poison the sums)
+            .filter((F.col("pos") + F.col("neg")) > 0)
+        )
+    else:
+        agg = (
+            base.select(*cols)
+            .groupBy(*kn, "s")
+            .agg(
+                F.sum("__y").cast("long").alias("pos"),
+                (F.count("__y") - F.sum("__y")).cast("long").alias("neg"),
+            )
+        )
+    if cuts:
+        agg = agg.filter(F.col("s") >= 0)  # NULL-score bucket
+    tot = Window.partitionBy(*kn)
+    w = tot.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
+    cum_pos = F.sum("pos").over(w)
+    cum_neg = F.sum("neg").over(w)
+    p = F.sum("pos").over(tot)
+    n = F.sum("neg").over(tot)
+    neg_below = cum_neg - F.col("neg")
+    per = agg.select(
+        *kn,
+        F.abs(
+            cum_pos.cast("double") / p - cum_neg.cast("double") / n
+        ).alias("gap"),
+        (
+            neg_below.cast("double") * F.col("pos")
+            + F.lit(0.5) * F.col("neg") * F.col("pos")
+        ).alias("u"),
+        p.alias("p"),
+        n.alias("n"),
+    )
+    out = per.groupBy(*kn).agg(
+        F.max("gap").alias("ks"),
+        (F.sum("u") / (F.first("p") * F.first("n"))).alias("auc"),
+        F.first("p").alias("n_pos"),
+        F.first("n").alias("n_neg"),
+    )
+    for c, k in zip(keys, kn):
+        out = out.withColumnRenamed(k, c)
+    return out
+
+
 def ks_auc(
     df: DataFrame,
     score_col: str,
@@ -202,7 +287,8 @@ def ks_auc(
       average ranks), accumulated per distinct score:
       ``Σ (neg_below·pos_i + 0.5·neg_i·pos_i) / (P·N)`` ascending.
 
-    NULL scores and NULL labels are excluded (no ordering information).
+    NULL scores and NULL labels are excluded (no ordering information);
+    with none left the row is all NULL.
     With ``cuts`` the scores are pre-bucketed (bounded distinct frame at
     any scale — see module docstring).  Without ``cuts`` the default
     ``prebins="auto"`` probes distinct-score cardinality
@@ -218,68 +304,10 @@ def ks_auc(
     weight k equals k-fold replication. Bad weights fail loudly in the
     scan (iv_screen's raise_error pattern); n_pos/n_neg become doubles.
     """
-    if prebins not in ("auto", "exact"):
-        raise ValueError("prebins must be 'auto' or 'exact'")
-    y = F.col(y_col).cast("double")
-    s = F.col(score_col).cast("double")
-    base = df.filter(s.isNotNull() & y.isNotNull())
-    if cuts is None and prebins == "auto":
-        cuts = _auto_cuts(
-            base, s, max_distinct=max_distinct, n_buckets=auto_buckets
-        )
-    key = _bucketize(s, cuts) if cuts else s
-    if weight_col is not None:
-        from .drift import _weight_expr
-
-        wv = _weight_expr(weight_col, "ks_auc")
-        pos_w = F.when(F.col("__w") > 0, F.col("__w"))
-        agg = (
-            base.select(key.alias("s"), y.alias("__y"), wv.alias("__w"))
-            .groupBy("s")
-            .agg(
-                F.sum(pos_w * F.col("__y")).alias("pos"),
-                F.sum(pos_w * (1 - F.col("__y"))).alias("neg"),
-            )
-            # zero-weight-only score groups carry no mass (and 0 * NaN
-            # label would poison the sums)
-            .filter((F.col("pos") + F.col("neg")) > 0)
-        )
-    else:
-        agg = (
-            base.select(key.alias("s"), y.alias("__y"))
-            .groupBy("s")
-            .agg(
-                F.sum("__y").cast("long").alias("pos"),
-                (F.count("__y") - F.sum("__y")).cast("long").alias("neg"),
-            )
-        )
-    if cuts:
-        agg = agg.filter(F.col("s") >= 0)  # NULL-score bucket
-    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy(F.lit(1))
-    cum_pos = F.sum("pos").over(w)
-    cum_neg = F.sum("neg").over(w)
-    p = F.sum("pos").over(tot)
-    n = F.sum("neg").over(tot)
-    neg_below = cum_neg - F.col("neg")
-    per = agg.select(
-        (
-            F.abs(
-                cum_pos.cast("double") / p - cum_neg.cast("double") / n
-            )
-        ).alias("gap"),
-        (
-            neg_below.cast("double") * F.col("pos")
-            + F.lit(0.5) * F.col("neg") * F.col("pos")
-        ).alias("u"),
-        p.alias("p"),
-        n.alias("n"),
-    )
-    return per.agg(
-        F.max("gap").alias("ks"),
-        (F.sum("u") / (F.first("p") * F.first("n"))).alias("auc"),
-        F.first("p").alias("n_pos"),
-        F.first("n").alias("n_neg"),
+    return _ks_auc(
+        df, score_col, y_col, (), where="ks_auc", cuts=cuts,
+        weight_col=weight_col, prebins=prebins,
+        max_distinct=max_distinct, auto_buckets=auto_buckets,
     )
 
 
@@ -308,70 +336,8 @@ def ks_auc_grouped(
     grid (cuts common across groups keep the per-group metrics
     comparable), not a probe per group.
     """
-    if prebins not in ("auto", "exact"):
-        raise ValueError("prebins must be 'auto' or 'exact'")
-    y = F.col(y_col).cast("double")
-    s = F.col(score_col).cast("double")
-    g = F.col(group_col)
-    base = df.filter(s.isNotNull() & y.isNotNull())
-    if cuts is None and prebins == "auto":
-        cuts = _auto_cuts(
-            base, s, max_distinct=max_distinct, n_buckets=auto_buckets
-        )
-    key = _bucketize(s, cuts) if cuts else s
-    if weight_col is not None:
-        from .drift import _weight_expr
-
-        wv = _weight_expr(weight_col, "ks_auc_grouped")
-        pos_w = F.when(F.col("__w") > 0, F.col("__w"))
-        agg = (
-            base.select(
-                g.alias("g"), key.alias("s"), y.alias("__y"), wv.alias("__w")
-            )
-            .groupBy("g", "s")
-            .agg(
-                F.sum(pos_w * F.col("__y")).alias("pos"),
-                F.sum(pos_w * (1 - F.col("__y"))).alias("neg"),
-            )
-            .filter((F.col("pos") + F.col("neg")) > 0)
-        )
-    else:
-        agg = (
-            base.select(g.alias("g"), key.alias("s"), y.alias("__y"))
-            .groupBy("g", "s")
-            .agg(
-                F.sum("__y").cast("long").alias("pos"),
-                (F.count("__y") - F.sum("__y")).cast("long").alias("neg"),
-            )
-        )
-    if cuts:
-        agg = agg.filter(F.col("s") >= 0)
-    w = (
-        Window.partitionBy("g")
-        .orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    return _ks_auc(
+        df, score_col, y_col, (group_col,), where="ks_auc_grouped",
+        cuts=cuts, weight_col=weight_col, prebins=prebins,
+        max_distinct=max_distinct, auto_buckets=auto_buckets,
     )
-    tot = Window.partitionBy("g")
-    cum_pos = F.sum("pos").over(w)
-    cum_neg = F.sum("neg").over(w)
-    p = F.sum("pos").over(tot)
-    n = F.sum("neg").over(tot)
-    neg_below = cum_neg - F.col("neg")
-    per = agg.select(
-        "g",
-        F.abs(
-            cum_pos.cast("double") / p - cum_neg.cast("double") / n
-        ).alias("gap"),
-        (
-            neg_below.cast("double") * F.col("pos")
-            + F.lit(0.5) * F.col("neg") * F.col("pos")
-        ).alias("u"),
-        p.alias("p"),
-        n.alias("n"),
-    )
-    return per.groupBy("g").agg(
-        F.max("gap").alias("ks"),
-        (F.sum("u") / (F.first("p") * F.first("n"))).alias("auc"),
-        F.first("p").alias("n_pos"),
-        F.first("n").alias("n_neg"),
-    ).withColumnRenamed("g", group_col)

@@ -169,8 +169,14 @@ def run_checks(
     unbounded). ``unique`` with ``exact=False`` estimates via
     HyperLogLog (``rsd``) inside the same scan — pair it with a
     ``min_ratio`` slack of at least ``rsd``; ``exact=True`` (default)
-    uses ``count(distinct ...)``, which Spark rewrites via Expand — one
-    extra shuffle of the key columns only.
+    runs one column-pruned ``distinct().count()`` job per expectation,
+    concurrently with the aggregate scan.
+
+    Each of those exact-unique jobs re-scans ``df`` (re-running its
+    whole lineage), so pass a deterministic or persisted input: a frame
+    built on ``rand()``, a non-deterministic sample or a source that
+    changes between reads can give the uniqueness counts and the row
+    count of different data.
     """
     exps = list(expectations)
     if not exps:

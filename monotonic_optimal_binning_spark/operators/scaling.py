@@ -30,14 +30,13 @@ is engine-new surface for the feature-engineering pipeline.
 
 from __future__ import annotations
 
-import json
 import math
-import os
 from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import artifacts
 __all__ = [
     "FeatureStats",
     "fit_feature_stats",
@@ -137,15 +136,11 @@ class FeatureStats:
         )
 
     def save_json(self, path: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.to_dict(), fh, indent=2, allow_nan=False)
-        os.replace(tmp, path)
+        artifacts.save_json(self.to_dict(), path)
 
     @classmethod
     def load_json(cls, path: str) -> "FeatureStats":
-        with open(path) as fh:
-            return cls.from_dict(json.load(fh))
+        return cls.from_dict(artifacts.load_json(path))
 
 
 def fit_feature_stats(

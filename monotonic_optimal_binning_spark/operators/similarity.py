@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..functions.vector import dot, l2_norm
 
 
@@ -197,19 +198,11 @@ class IVFCodebook:
         return cls(centroids=d["centroids"], seed=d.get("seed", 42))
 
     def save_json(self, path: str) -> None:
-        import json
-
-        with open(path, "w") as f:
-            # centroids are finite k-means means of finite vectors;
-            # allow_nan=False asserts strict JSON at write time
-            json.dump(self.to_dict(), f, allow_nan=False)
+        artifacts.save_json(self.to_dict(), path, indent=None)
 
     @classmethod
     def load_json(cls, path: str) -> "IVFCodebook":
-        import json
-
-        with open(path) as f:
-            return cls.from_dict(json.load(f))
+        return cls.from_dict(artifacts.load_json(path))
 
 
 def fit_ivf_codebook(

@@ -40,9 +40,7 @@ engine-new surface.
 
 from __future__ import annotations
 
-import json
 import math
-import os
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
@@ -51,6 +49,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import artifacts
 from .operators.binning import FittedBins
 
 __all__ = ["Scorecard"]
@@ -278,12 +277,8 @@ class Scorecard:
         )
 
     def save_json(self, path: str) -> None:
-        tmp = f"{path}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.to_dict(), f, indent=2, allow_nan=False)
-        os.replace(tmp, path)
+        artifacts.save_json(self.to_dict(), path)
 
     @classmethod
     def load_json(cls, path: str) -> "Scorecard":
-        with open(path) as f:
-            return cls.from_dict(json.load(f))
+        return cls.from_dict(artifacts.load_json(path))

@@ -32,7 +32,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.drift import _train_counts
+from ..operators.drift import _fitted_bin_counts, _psi_terms, _train_counts
 
 
 def streaming_bucket_counts(
@@ -68,28 +68,22 @@ def streaming_bucket_counts(
     if isinstance(stream.schema[ts].dataType, T.TimestampNTZType):
         stream = stream.withColumn(ts, F.col(ts).cast("timestamp"))
 
-    labeled = (
-        model.transform(stream, "interval", input_col or model.x, "__bucket")
-        .filter(
-            F.col("__bucket").isNotNull()
-            & ~F.col("__bucket").rlike("Missing|Excluded")
-        )
-        .withWatermark(ts, watermark)
-    )
     win = (
         F.window(F.col(ts), window, slide)
         if slide
         else F.window(F.col(ts), window)
     )
-    return (
-        labeled.groupBy(win.alias("__w"), F.col("__bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_actual"))
-        .select(
-            F.col("__w.start").alias("window_start"),
-            F.col("__w.end").alias("window_end"),
-            "bucket",
-            "n_actual",
-        )
+    labeled = model.transform(
+        stream.withWatermark(ts, watermark), "interval",
+        input_col or model.x, "__bucket",
+    )
+    return _fitted_bin_counts(
+        labeled, (win.alias("__w"),), None, "streaming_bucket_counts"
+    ).select(
+        F.col("__w.start").alias("window_start"),
+        F.col("__w.end").alias("window_end"),
+        "bucket",
+        "n_actual",
     )
 
 
@@ -139,23 +133,7 @@ def psi_over_windows(
         "n_expected",
         F.coalesce("n_actual", F.lit(0)).alias("n_actual"),
     )
-    w = Window.partitionBy("window_start", "window_end")
-    te = F.sum("n_expected").over(w)
-    ta = F.sum("n_actual").over(w)
-    k = F.count(F.lit(1)).over(w)
-    pe = (F.col("n_expected") + smoothing) / (te + smoothing * k)
-    pa = (F.col("n_actual") + smoothing) / (ta + smoothing * k)
-    out = j.select(
-        "window_start",
-        "window_end",
-        "bucket",
-        "n_expected",
-        "n_actual",
-        pe.alias("pct_expected"),
-        pa.alias("pct_actual"),
-        ((pa - pe) * F.log(pa / pe)).alias("psi_term"),
-    )
-    return out.withColumn(
+    return _psi_terms(j, ("window_start", "window_end"), smoothing).withColumn(
         "psi",
         F.sum("psi_term").over(
             Window.partitionBy("window_start", "window_end")

@@ -64,6 +64,8 @@ def main(sf_dir: str, only: list | None = None) -> int:
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
+        # no progress-bar redraws on the lines the verdicts print to
+        .config("spark.ui.showConsoleProgress", "false")
         # local mode: the driver JVM IS the executor; the 1g default is
         # not a meaningful scale constraint (sf1 robustness runs OOMed
         # spill-reader buffers under it) — match conftest's session

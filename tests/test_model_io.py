@@ -9,10 +9,12 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from monotonic_optimal_binning_spark.operators.binning import FittedBins, GroupedBins
+from monotonic_optimal_binning_spark.scorecard import Scorecard
 
 
 def _fit_small(spark):
@@ -96,3 +98,61 @@ def test_grouped_bins_json_roundtrip(spark, tmp_path):
     out_a = grouped.transform(df, assign="woe", input_col="x").select("x_woe")
     out_b = loaded.transform(df, assign="woe", input_col="x").select("x_woe")
     assert out_a.collect() == out_b.collect()
+
+
+def _small_artifacts():
+    """One hand-built instance of each model artifact class (no Spark)."""
+    from monotonic_optimal_binning_spark.operators.calibration import (
+        GroupedIsotonicCalibration,
+        IsotonicCalibration,
+    )
+    from monotonic_optimal_binning_spark.operators.categorical import CatBins
+    from monotonic_optimal_binning_spark.operators.similarity import IVFCodebook
+
+    fb = FittedBins.from_cuts("x", [1.0, 2.0], [-0.5, 0.0, 0.5])
+    iso = IsotonicCalibration(
+        "s", np.array([0.5]), np.array([0.1, 0.9]), "+", 2
+    )
+    cat = CatBins.from_dict({
+        "x": "c", "y": "y", "smoothing": 0.5,
+        "categories": [
+            {"category": "a", "count": 3, "bads": 1, "woe": 0.1, "iv": 0.01}
+        ],
+    })
+    return [
+        fb,
+        GroupedBins("g", "x", "y", {"a": fb}),
+        iso,
+        GroupedIsotonicCalibration("g", "s", {"a": iso}),
+        cat,
+        IVFCodebook([[0.0, 1.0]]),
+        Scorecard({"x": fb}),
+    ]
+
+
+@pytest.mark.parametrize(
+    "art", _small_artifacts(), ids=lambda a: type(a).__name__
+)
+def test_failed_save_leaves_previous_artifact(tmp_path, monkeypatch, art):
+    """save_json writes strict JSON to a temporary file and renames it
+    into place: a dump that raises part-way (here on a NaN, which
+    strict JSON rejects) leaves the previous artifact byte-identical
+    and no temporary file behind."""
+    p = str(tmp_path / "art.json")
+    art.save_json(p)
+    with open(p) as f:
+        before = f.read()
+    # GroupedBins and Scorecard serialize their models through FittedBins
+    owner = FittedBins if isinstance(art, (GroupedBins, Scorecard)) else type(art)
+    good = owner.to_dict
+    monkeypatch.setattr(
+        owner, "to_dict",
+        lambda self: {**good(self), "zz": [0.0] * 2000 + [float("nan")]},
+    )
+    with pytest.raises(ValueError):
+        art.save_json(p)
+    monkeypatch.undo()
+    with open(p) as f:
+        assert f.read() == before
+    assert os.listdir(tmp_path) == ["art.json"]
+    type(art).load_json(p)
