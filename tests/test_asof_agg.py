@@ -9,33 +9,51 @@ from monotonic_optimal_binning_spark.operators.asof import (
     asof_agg_join,
     asof_agg_join_bucketed,
 )
+from monotonic_optimal_binning_spark.operators.windows import horizon_label
 
 
 def _frames(seed=51, n_left=300, n_right=900):
     rng = np.random.default_rng(seed)
-    left = pd.DataFrame(
-        {
-            "oid": np.arange(n_left),
-            "user": rng.integers(0, 6, n_left),
-            "ts": np.round(rng.uniform(0, 3000, n_left), 3),
-        }
-    )
+
+    def users(n):
+        # one hot entity + a few normal ones
+        return np.where(rng.uniform(size=n) < 0.6, 0, rng.integers(1, 6, n))
+
     right = pd.DataFrame(
         {
-            "user": rng.integers(0, 6, n_right),
+            "user": users(n_right),
             "ts": np.round(rng.uniform(0, 3000, n_right), 3),
             "v": rng.uniform(0, 5, n_right).round(2),
         }
     )
+    lts = np.round(rng.uniform(0, 3000, n_left), 3)
+    # same-millisecond ties: some probes sit exactly on a right event
+    k = n_left // 5
+    lts[rng.choice(n_left, k, replace=False)] = right["ts"].to_numpy()[
+        rng.choice(n_right, k, replace=False)
+    ]
+    rts = right["ts"].to_numpy().copy()
+    k = n_right // 10
+    rts[rng.choice(n_right, k, replace=False)] = rts[
+        rng.choice(n_right, k, replace=False)
+    ]
+    right["ts"] = rts
+    left = pd.DataFrame(
+        {"oid": np.arange(n_left), "user": users(n_left), "ts": lts}
+    )
     return left, right
 
 
+HORIZONS = [60.0, 600.0, 90.5]
+
+
 def _truth(left, right, horizons, include_current=True):
-    lms = (left["ts"] * 1000).round().astype("int64")
-    rms = (right["ts"] * 1000).round().astype("int64")
+    # epoch millis floor like the operator (functions.timeutil.epoch_millis)
+    lms = np.floor(left["ts"].to_numpy() * 1000).astype("int64")
+    rms = np.floor(right["ts"].to_numpy() * 1000).astype("int64")
     rows = {}
     for h in horizons:
-        hm = int(h * 1000)
+        hm = int(round(h * 1000))
         sums, counts = [], []
         for i, r in left.iterrows():
             hi = lms[i] if include_current else lms[i] - 1
@@ -46,45 +64,51 @@ def _truth(left, right, horizons, include_current=True):
             )
             sums.append(right.loc[m, "v"].sum() if m.any() else np.nan)
             counts.append(int(m.sum()))
-        rows[f"v_h{int(h)}_sum"] = sums
-        rows[f"v_h{int(h)}_count"] = counts
+        rows[f"v_h{horizon_label(h)}_sum"] = sums
+        rows[f"v_h{horizon_label(h)}_count"] = counts
     return pd.DataFrame(rows, index=left["oid"])
 
 
 def test_asof_agg_matches_truth(spark):
     left, right = _frames()
-    out = asof_agg_join(
-        spark.createDataFrame(left),
-        spark.createDataFrame(right),
-        "user", "ts", value="v", horizons_seconds=[60.0, 600.0],
-    )
-    got = out.toPandas().set_index("oid").sort_index()
-    assert list(got.columns) == [
-        "user", "ts", "v_h60_sum", "v_h60_count",
-        "v_h600_sum", "v_h600_count",
-    ]
-    exp = _truth(left, right, [60.0, 600.0])
-    for c in exp.columns:
-        if c.endswith("_count"):
-            assert got[c].astype(int).tolist() == exp[c].tolist(), c
-        else:
-            np.testing.assert_allclose(
-                got[c].to_numpy(), exp[c].to_numpy(),
-                rtol=1e-9, equal_nan=True, err_msg=c,
-            )
+    for include_current in (True, False):
+        out = asof_agg_join(
+            spark.createDataFrame(left),
+            spark.createDataFrame(right),
+            "user", "ts", value="v", horizons_seconds=HORIZONS,
+            include_current=include_current,
+        )
+        got = out.toPandas().set_index("oid").sort_index()
+        assert list(got.columns) == [
+            "user", "ts", "v_h60_sum", "v_h60_count",
+            "v_h600_sum", "v_h600_count", "v_h90p5_sum", "v_h90p5_count",
+        ]
+        exp = _truth(left, right, HORIZONS, include_current)
+        for c in exp.columns:
+            if c.endswith("_count"):
+                assert got[c].astype(int).tolist() == exp[c].tolist(), c
+            else:
+                np.testing.assert_allclose(
+                    got[c].to_numpy(), exp[c].to_numpy(),
+                    rtol=1e-9, equal_nan=True, err_msg=c,
+                )
 
 
 def test_bucketed_equals_plain(spark):
     left, right = _frames(seed=53)
-    a = asof_agg_join(
-        spark.createDataFrame(left), spark.createDataFrame(right),
-        "user", "ts", value="v", horizons_seconds=[60.0, 600.0],
-    ).toPandas().set_index("oid").sort_index()
-    b = asof_agg_join_bucketed(
-        spark.createDataFrame(left), spark.createDataFrame(right),
-        "user", "ts", value="v", horizons_seconds=[60.0, 600.0],
-    ).toPandas().set_index("oid").sort_index()
-    pd.testing.assert_frame_equal(a, b[a.columns])
+    stats = ("sum", "count", "mean", "min", "max")
+    for include_current in (True, False):
+        a = asof_agg_join(
+            spark.createDataFrame(left), spark.createDataFrame(right),
+            "user", "ts", value="v", horizons_seconds=HORIZONS, stats=stats,
+            include_current=include_current,
+        ).toPandas().set_index("oid").sort_index()
+        b = asof_agg_join_bucketed(
+            spark.createDataFrame(left), spark.createDataFrame(right),
+            "user", "ts", value="v", horizons_seconds=HORIZONS, stats=stats,
+            include_current=include_current,
+        ).toPandas().set_index("oid").sort_index()
+        pd.testing.assert_frame_equal(a, b[a.columns])
 
 
 def test_null_time_conventions(spark):

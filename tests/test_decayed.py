@@ -43,12 +43,18 @@ def _brute(pdf, keys, h, *, truncate=None, include_current=True):
 
 def _data(seed=41, n=300, with_nulls=True):
     rng = np.random.default_rng(seed)
+    ts = rng.uniform(0, 500, n).round(3)
+    # same-millisecond ties inside (and across) entities
+    k = n // 10
+    ts[rng.choice(n, k, replace=False)] = ts[rng.choice(n, k, replace=False)]
     pdf = pd.DataFrame(
         {
             "eid": np.arange(n),
-            "user": rng.integers(0, 4, n),
+            # one hot entity + a few normal ones
+            "user": np.where(rng.uniform(size=n) < 0.6, 0,
+                             rng.integers(1, 4, n)),
             "seg": rng.choice(["a", "b"], n),
-            "ts": rng.uniform(0, 500, n).round(3),
+            "ts": ts,
             "v": rng.uniform(0.1, 5, n).round(2),
         }
     )
@@ -61,30 +67,33 @@ def _data(seed=41, n=300, with_nulls=True):
 def test_decayed_equals_brute_force_across_chunks(spark):
     """H=10s, truncation 4 half-lives -> 40s chunks over a 500s span:
     ~12 chunks, so frames routinely cross chunk boundaries and the
-    truncation actually drops contributors."""
+    truncation actually drops contributors. A second, fractional
+    half-life (2.5s -> 10s chunks) rides the same call."""
     pdf = _data()
     df = spark.createDataFrame(pdf)
     out = (
         time_decayed_features(
-            df, ["user", "seg"], "ts", "v", [10.0], truncate_half_lives=4
+            df, ["user", "seg"], "ts", "v", [10.0, 2.5],
+            truncate_half_lives=4,
         )
         .toPandas()
         .set_index("eid")
         .sort_index()
     )
-    exp_s, exp_c = _brute(
-        pdf.set_index("eid").sort_index().reset_index(),
-        ["user", "seg"],
-        10.0,
-        truncate=4,
-    )
-    np.testing.assert_allclose(
-        out["v_hl10_sum"].to_numpy(dtype=float), exp_s,
-        rtol=1e-9, equal_nan=True,
-    )
-    np.testing.assert_allclose(
-        out["v_hl10_count"].to_numpy(dtype=float), exp_c, rtol=1e-9
-    )
+    for h, lbl in ((10.0, "10"), (2.5, "2p5")):
+        exp_s, exp_c = _brute(
+            pdf.set_index("eid").sort_index().reset_index(),
+            ["user", "seg"],
+            h,
+            truncate=4,
+        )
+        np.testing.assert_allclose(
+            out[f"v_hl{lbl}_sum"].to_numpy(dtype=float), exp_s,
+            rtol=1e-9, equal_nan=True,
+        )
+        np.testing.assert_allclose(
+            out[f"v_hl{lbl}_count"].to_numpy(dtype=float), exp_c, rtol=1e-9
+        )
 
 
 def test_decayed_exclude_current_and_mean(spark):
@@ -220,80 +229,96 @@ def test_decayed_plan_one_window_per_half_life(spark):
 
 def test_asof_decayed_join_equals_brute_force(spark):
     """Two-table decayed aggregation: probes vs an independent
-    contributor stream, nulls on both sides, frames crossing chunk
-    boundaries (H=10s, T=4 -> 40s chunks over a 400s span)."""
+    contributor stream, nulls on both sides, a hot entity, probes tied to
+    contributor milliseconds, both frame ends, and frames crossing chunk
+    boundaries (H=10s, T=4 -> 40s chunks over a 400s span; a fractional
+    H=2.5s -> 10s chunks in the same call)."""
     from monotonic_optimal_binning_spark.operators.asof import (
         asof_decayed_join,
     )
 
     rng = np.random.default_rng(91)
     nl, nr = 150, 400
+    right = pd.DataFrame(
+        {
+            "user": np.where(rng.uniform(size=nr) < 0.6, 0,
+                             rng.integers(1, 4, nr)),
+            "ts": rng.uniform(0, 400, nr).round(3),
+            "v": rng.uniform(0.1, 5, nr).round(2),
+        }
+    )
+    lts = rng.uniform(0, 400, nl).round(3)
+    lts[rng.choice(nl, 30, replace=False)] = right["ts"].to_numpy()[
+        rng.choice(nr, 30, replace=False)
+    ]
     left = pd.DataFrame(
         {
             "pid": np.arange(nl),
-            "user": rng.integers(0, 4, nl),
-            "ts": rng.uniform(0, 400, nl).round(3),
-        }
-    )
-    right = pd.DataFrame(
-        {
-            "user": rng.integers(0, 4, nr),
-            "ts": rng.uniform(0, 400, nr).round(3),
-            "v": rng.uniform(0.1, 5, nr).round(2),
+            "user": np.where(rng.uniform(size=nl) < 0.6, 0,
+                             rng.integers(1, 4, nl)),
+            "ts": lts,
         }
     )
     left.loc[rng.choice(nl, 5, replace=False), "ts"] = np.nan
     right.loc[rng.choice(nr, 10, replace=False), "ts"] = np.nan
     right.loc[rng.choice(nr, 10, replace=False), "v"] = np.nan
 
-    out = (
-        asof_decayed_join(
-            spark.createDataFrame(left),
-            spark.createDataFrame(right),
-            "user",
-            "ts",
-            value="v",
-            half_lives_seconds=[10.0],
-            stats=("sum", "count", "mean"),
-            truncate_half_lives=4,
-        )
-        .toPandas()
-        .set_index("pid")
-        .sort_index()
-    )
-    h_ms, c_ms = 10_000.0, 40_000.0
     r_ms = np.trunc(right["ts"].to_numpy(dtype=np.float64) * 1000)
     r_ok = right["ts"].notna().to_numpy() & right["v"].notna().to_numpy()
-    exp_s, exp_c = [], []
-    for _, p in left.sort_values("pid").iterrows():
-        if pd.isna(p["ts"]):
-            exp_s.append(np.nan)
-            exp_c.append(0.0)
-            continue
-        t = np.trunc(np.float64(p["ts"]) * 1000)
-        m = (
-            r_ok
-            & (right["user"].to_numpy() == p["user"])
-            & (r_ms <= t)
-            & (r_ms >= t - c_ms)
+    for include_current in (True, False):
+        out = (
+            asof_decayed_join(
+                spark.createDataFrame(left),
+                spark.createDataFrame(right),
+                "user",
+                "ts",
+                value="v",
+                half_lives_seconds=[10.0, 2.5],
+                stats=("sum", "count", "mean"),
+                include_current=include_current,
+                truncate_half_lives=4,
+            )
+            .toPandas()
+            .set_index("pid")
+            .sort_index()
         )
-        w = np.power(2.0, (r_ms[m] - t) / h_ms)
-        v = right["v"].to_numpy(dtype=float)[m]
-        exp_s.append(float((v * w).sum()) if m.any() else np.nan)
-        exp_c.append(float(w.sum()))
-    exp_s, exp_c = np.array(exp_s), np.array(exp_c)
-    np.testing.assert_allclose(
-        out["v_hl10_sum"].to_numpy(dtype=float), exp_s,
-        rtol=1e-9, equal_nan=True,
-    )
-    np.testing.assert_allclose(
-        out["v_hl10_count"].to_numpy(dtype=float), exp_c, rtol=1e-9
-    )
-    exp_m = np.where(exp_c > 0, exp_s / np.where(exp_c > 0, exp_c, 1), np.nan)
-    np.testing.assert_allclose(
-        out["v_hl10_mean"].to_numpy(dtype=float), exp_m,
-        rtol=1e-9, equal_nan=True,
-    )
+        for h, lbl in ((10.0, "10"), (2.5, "2p5")):
+            h_ms, c_ms = h * 1000, 4 * h * 1000
+            exp_s, exp_c = [], []
+            for _, p in left.sort_values("pid").iterrows():
+                if pd.isna(p["ts"]):
+                    exp_s.append(np.nan)
+                    exp_c.append(0.0)
+                    continue
+                t = np.trunc(np.float64(p["ts"]) * 1000)
+                hi = t if include_current else t - 1
+                m = (
+                    r_ok
+                    & (right["user"].to_numpy() == p["user"])
+                    & (r_ms <= hi)
+                    & (r_ms >= t - c_ms)
+                )
+                w = np.power(2.0, (r_ms[m] - t) / h_ms)
+                v = right["v"].to_numpy(dtype=float)[m]
+                exp_s.append(float((v * w).sum()) if m.any() else np.nan)
+                exp_c.append(float(w.sum()))
+            exp_s, exp_c = np.array(exp_s), np.array(exp_c)
+            key = f"h={h} include_current={include_current}"
+            np.testing.assert_allclose(
+                out[f"v_hl{lbl}_sum"].to_numpy(dtype=float), exp_s,
+                rtol=1e-9, equal_nan=True, err_msg=key,
+            )
+            np.testing.assert_allclose(
+                out[f"v_hl{lbl}_count"].to_numpy(dtype=float), exp_c,
+                rtol=1e-9, err_msg=key,
+            )
+            exp_m = np.where(
+                exp_c > 0, exp_s / np.where(exp_c > 0, exp_c, 1), np.nan
+            )
+            np.testing.assert_allclose(
+                out[f"v_hl{lbl}_mean"].to_numpy(dtype=float), exp_m,
+                rtol=1e-9, equal_nan=True, err_msg=key,
+            )
 
 
 def test_asof_decayed_join_plan_linear(spark):

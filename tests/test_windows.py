@@ -268,12 +268,25 @@ def test_lag_lead_bucketed_equals_plain(spark):
         pd.testing.assert_frame_equal(got, plain), bucket
 
 
+def _ties(rng, ts, frac=0.1):
+    """Copy the timestamps of a random ``frac`` of rows onto other rows:
+    same-millisecond ties inside (and across) entities."""
+    ts = ts.copy()
+    n = len(ts)
+    k = int(n * frac)
+    ts[rng.choice(n, k, replace=False)] = ts[rng.choice(n, k, replace=False)]
+    return ts
+
+
 def test_multi_horizon_features_vs_truth(spark):
     """Trailing-horizon point-in-time aggregates vs an O(n^2) pandas
-    truth, plus: all horizons share one shuffle in the executed plan."""
+    truth (hot entity, same-millisecond ties, a fractional horizon, both
+    frame ends), plus: all horizons share one shuffle in the executed
+    plan."""
     import pytest
 
     from monotonic_optimal_binning_spark.operators.windows import (
+        horizon_label,
         multi_horizon_features,
     )
 
@@ -282,31 +295,43 @@ def test_multi_horizon_features_vs_truth(spark):
     pdf = pd.DataFrame(
         {
             "eid": np.arange(n),
-            "user": rng.integers(0, 5, n),
-            "ts": np.round(rng.uniform(0, 5000, n), 3),
+            # one hot entity + a few normal ones
+            "user": np.where(rng.uniform(size=n) < 0.6, 0,
+                             rng.integers(1, 5, n)),
+            "ts": _ties(rng, np.round(rng.uniform(0, 5000, n), 3)),
             "v": rng.uniform(0, 10, n).round(2),
         }
     )
     df = spark.createDataFrame(pdf)
-    out = multi_horizon_features(
-        df, "user", "ts", "v", [60.0, 600.0], stats=("sum", "count")
-    )
-    got = out.toPandas().set_index("eid").sort_index()
+    horizons = [60.0, 600.0, 90.5]
+    stats = ("sum", "count", "mean", "min", "max")
     # truth uses millisecond-truncated timestamps like the operator
-    ms = (pdf["ts"] * 1000).astype("int64")
-    for h in (60.0, 600.0):
-        hm = int(h * 1000)
-        for i, r in pdf.iterrows():
-            m = (
-                (pdf["user"] == r["user"])
-                & (ms >= ms[i] - hm)
-                & (ms <= ms[i])
-            )
-            assert got.loc[r["eid"], f"v_h{int(h)}_sum"] == pytest.approx(
-                pdf.loc[m, "v"].sum()
-            ), (r["eid"], h)
-            assert got.loc[r["eid"], f"v_h{int(h)}_count"] == m.sum()
-    # one shuffle for BOTH horizons (shared partitioning + ordering)
+    ms = (pdf["ts"] * 1000).astype("int64").to_numpy()
+    user = pdf["user"].to_numpy()
+    v = pdf["v"].to_numpy()
+    for include_current in (True, False):
+        out = multi_horizon_features(
+            df, "user", "ts", "v", horizons, stats=stats,
+            include_current=include_current,
+        )
+        got = out.toPandas().set_index("eid").sort_index()
+        for h in horizons:
+            hm = int(round(h * 1000))
+            col = f"v_h{horizon_label(h)}"
+            for i in range(n):
+                hi = ms[i] if include_current else ms[i] - 1
+                m = (user == user[i]) & (ms >= ms[i] - hm) & (ms <= hi)
+                row = got.loc[i]
+                key = (i, h, include_current)
+                assert row[f"{col}_count"] == m.sum(), key
+                if not m.any():
+                    assert pd.isna(row[f"{col}_sum"]), key
+                    continue
+                assert row[f"{col}_sum"] == pytest.approx(v[m].sum()), key
+                assert row[f"{col}_mean"] == pytest.approx(v[m].mean()), key
+                assert row[f"{col}_min"] == v[m].min(), key
+                assert row[f"{col}_max"] == v[m].max(), key
+    # one shuffle for ALL horizons (shared partitioning + ordering)
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
@@ -330,22 +355,24 @@ def test_multi_horizon_bucketed_equals_plain(spark):
             # one pathologically hot entity + a few normal ones
             "user": np.where(rng.uniform(size=n) < 0.7, 0,
                              rng.integers(1, 4, n)),
-            "ts": np.round(rng.uniform(0, 3000, n), 3),
+            "ts": _ties(rng, np.round(rng.uniform(0, 3000, n), 3)),
             "v": rng.uniform(0, 10, n).round(2),
         }
     )
     df = spark.createDataFrame(pdf).repartition(8)
+    horizons = [45.0, 700.0, 12.5]
+    stats = ("sum", "count", "mean", "min", "max")
     for include_current in (True, False):
         plain = (
             multi_horizon_features(
-                df, "user", "ts", "v", [45.0, 700.0],
+                df, "user", "ts", "v", horizons, stats=stats,
                 include_current=include_current,
             )
             .toPandas().set_index("eid").sort_index()
         )
         bucketed = (
             multi_horizon_features_bucketed(
-                df, "user", "ts", "v", [45.0, 700.0],
+                df, "user", "ts", "v", horizons, stats=stats,
                 include_current=include_current,
             )
             .toPandas().set_index("eid").sort_index()
