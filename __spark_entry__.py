@@ -605,7 +605,8 @@ def q_multi_horizon(spark, sf_dir):
     (unix_micros // 1000), so the oracle's RANGE frames agree at µs
     boundaries; values pre-scaled to exact micro-units (floor(v*1e6) as
     BIGINT) so frame sums are order-independent integers on both
-    engines."""
+    engines. A null-time event contributes nothing and gets count 0 /
+    null sums (the oracle masks v6 where ms IS NULL)."""
     from monotonic_optimal_binning_spark.operators.windows import (
         multi_horizon_features,
     )
@@ -4993,12 +4994,18 @@ def oracle_sql() -> dict[str, str]:
         "multi_horizon": """
             -- trailing-horizon point-in-time features: exact epoch-ms
             -- order keys (µs // 1000) and exact micro-unit BIGINT sums,
-            -- so RANGE frame membership and frame sums are engine-exact
-            WITH e AS (
+            -- so RANGE frame membership and frame sums are engine-exact;
+            -- a null-time event contributes nothing (v6 masked where ms
+            -- IS NULL), so it gets count 0 / null sums
+            WITH t AS (
               SELECT event_id, user_id,
                      epoch_us(ts) // 1000 AS ms,
                      CAST(floor(value * 1e6) AS BIGINT) AS v6
-              FROM events)
+              FROM events),
+            e AS (
+              SELECT event_id, user_id, ms,
+                     CASE WHEN ms IS NOT NULL THEN v6 END AS v6
+              FROM t)
             SELECT event_id,
                    CAST(sum(v6) OVER w1 AS BIGINT) AS h1_sum,
                    count(v6) OVER w1 AS h1_n,

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_seconds as _ts_expr
-from .windows import check_output_names, horizon_label
+from .windows import _keys, _trailing_frame
 
 _SIDE = "__asof_side"
 _MATCH_TS = "__asof_matched_ts"
@@ -556,16 +556,6 @@ def _bucketed_union_window(
     return filled.filter(F.col(_SIDE) == left_side).drop(_SIDE, "__ts", "__bkt")
 
 
-def _agg_fns():
-    return {
-        "sum": F.sum,
-        "count": F.count,
-        "mean": F.avg,
-        "min": F.min,
-        "max": F.max,
-    }
-
-
 def asof_agg_join(
     left: DataFrame,
     right: DataFrame,
@@ -586,11 +576,10 @@ def asof_agg_join(
     construction (nothing after ``t`` is visible; the as-of join carries
     the LATEST value, this carries trailing aggregates).
 
-    Plan (one shuffle of |L|+|R| for ALL horizons): union left probes
-    with right contributor rows on exact epoch-ms keys, then every
-    horizon is a range frame over the SAME (key, ms) window partitioning
-    — aggregates see only contributor values (probe rows carry null), so
-    nothing double-counts, and Catalyst plans a single Window operator.
+    Plan (one shuffle of |L|+|R| for ALL horizons): left probes unioned
+    with right contributor rows, every horizon a range frame over the
+    SAME (key, ms) Window — the two-table, unchunked form of
+    :func:`~.windows._trailing_frame`.
 
     Semantics: a null/invalid left timestamp matches nothing (count 0,
     null sums — the engine-wide as-of convention); null-ts right rows
@@ -602,64 +591,10 @@ def asof_agg_join(
     Skew: a hot entity serializes into one task — see
     :func:`asof_agg_join_bucketed`.
     """
-    from ..functions.timeutil import epoch_millis
-
-    keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
-    fns = _agg_fns()
-    for s in stats:
-        if s not in fns:
-            raise ValueError(f"unknown stat '{s}'; choose from {sorted(fns)}")
-    prefix = prefix or f"{value}_h"
-    check_output_names(
-        left.columns,
-        [
-            f"{prefix}{horizon_label(h)}_{s}"
-            for h in horizons_seconds
-            for s in stats
-        ],
-    )
-    for c in ("__ms", "__is_q", "__contrib_v"):
-        if c in left.columns:
-            raise ValueError(f"left column '{c}' shadows an internal name")
-    for h in horizons_seconds:
-        if h <= 0:
-            raise ValueError("horizons must be > 0 seconds")
-
-    lms = epoch_millis(left, left_ts)
-    rms = epoch_millis(right, right_ts)
-    probes = left.select(
-        "*", lms.alias("__ms"), F.lit(1).alias("__is_q")
-    )
-    contrib = right.filter(rms.isNotNull()).select(
-        *[F.col(k) for k in keys],
-        rms.alias("__ms"),
-        F.lit(0).alias("__is_q"),
-        F.col(value).alias("__contrib_v"),
-    )
-    # null-ms probes stay in the union: they sort into the null peer
-    # group, whose frame holds no contributor rows (contributors with
-    # null ts were filtered) -> count 0 / null sums with NO second scan
-    # of the probe side
-    both = probes.unionByName(contrib, allowMissingColumns=True)
-
-    end = 0 if include_current else -1
-    new_cols = []
-    for h in horizons_seconds:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__ms"))
-            .rangeBetween(-int(round(float(h) * 1000)), end)
-        )
-        for s in stats:
-            new_cols.append(
-                fns[s](F.col("__contrib_v"))
-                .over(w)
-                .alias(f"{prefix}{horizon_label(h)}_{s}")
-            )
-    aggd = both.select("*", *new_cols)
-    return aggd.filter(F.col("__is_q") == 1).drop(
-        "__ms", "__is_q", "__contrib_v"
+    return _trailing_frame(
+        left, _keys(on), left_ts, value, horizons_seconds, stats=stats,
+        include_current=include_current, prefix=prefix or f"{value}_h",
+        right=right, right_ts=right_ts or left_ts,
     )
 
 
@@ -677,86 +612,17 @@ def asof_agg_join_bucketed(
     prefix: Optional[str] = None,
 ) -> DataFrame:
     """Skew-safe :func:`asof_agg_join`: identical output, but no task
-    ever holds a hot entity's full history.
-
-    Per horizon ``h``, rows chunk by ``floor(t / h)`` and every
-    contributor is ALSO ghosted into the next chunk: a trailing window
-    ``[t - h, t]`` only reaches the current and previous chunk, so a
-    range window over ``(entity, chunk)`` partitions reproduces the
-    global result exactly while bounding tasks at two chunks of one
-    entity. Cost: one shuffle + one contributor re-read per horizon —
-    the price of skew immunity (the plain plan does all horizons in
-    one).
+    ever holds a hot entity's full history — the chunked two-table form
+    of :func:`~.windows._trailing_frame` (per horizon ``h``, chunks of
+    width ``h``; contributors ghost into the next chunk). Cost: one
+    shuffle + one contributor re-read per horizon — the price of skew
+    immunity (the plain plan does all horizons in one).
     """
-    from ..functions.timeutil import epoch_millis
-
-    keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
-    fns = _agg_fns()
-    for s in stats:
-        if s not in fns:
-            raise ValueError(f"unknown stat '{s}'; choose from {sorted(fns)}")
-    prefix = prefix or f"{value}_h"
-    check_output_names(
-        left.columns,
-        [
-            f"{prefix}{horizon_label(h)}_{s}"
-            for h in horizons_seconds
-            for s in stats
-        ],
+    return _trailing_frame(
+        left, _keys(on), left_ts, value, horizons_seconds, stats=stats,
+        include_current=include_current, prefix=prefix or f"{value}_h",
+        right=right, right_ts=right_ts or left_ts, chunked=True,
     )
-    for h in horizons_seconds:
-        if h <= 0:
-            raise ValueError("horizons must be > 0 seconds")
-    for c in ("__ms", "__is_q", "__chunk", "__contrib_v"):
-        if c in left.columns:
-            raise ValueError(f"left column '{c}' shadows an internal name")
-    end = 0 if include_current else -1
-
-    rms = epoch_millis(right, right_ts)
-    out = left
-    for h in horizons_seconds:
-        h_ms = int(round(float(h) * 1000))
-        lms = epoch_millis(out, left_ts)
-        probes = out.select(
-            "*",
-            lms.alias("__ms"),
-            F.lit(1).alias("__is_q"),
-        ).withColumn("__chunk", F.floor(F.col("__ms") / F.lit(h_ms)))
-        # contributor + its next-chunk ghost via explode, NOT a
-        # base-union-ghost self-union (which scans the right side twice
-        # per horizon); both copies are is_q=0 so a plain array explode
-        # does it in one right-side pass
-        base = right.filter(rms.isNotNull()).select(
-            *[F.col(k) for k in keys],
-            rms.alias("__ms"),
-            F.lit(0).alias("__is_q"),
-            F.col(value).alias("__contrib_v"),
-        )
-        rchunk = F.floor(F.col("__ms") / F.lit(h_ms))
-        contribs = base.select(
-            "*",
-            F.explode(F.array(rchunk, rchunk + F.lit(1))).alias("__chunk"),
-        )
-        both = probes.unionByName(contribs, allowMissingColumns=True)
-        w = (
-            Window.partitionBy(*keys, "__chunk")
-            .orderBy(F.col("__ms"))
-            .rangeBetween(-h_ms, end)
-        )
-        both = both.select(
-            "*",
-            *[
-                fns[s](F.col("__contrib_v"))
-                .over(w)
-                .alias(f"{prefix}{horizon_label(h)}_{s}")
-                for s in stats
-            ],
-        )
-        out = both.filter(F.col("__is_q") == 1).drop(
-            "__ms", "__is_q", "__chunk", "__contrib_v"
-        )
-    return out
 
 
 def asof_decayed_join(
@@ -778,111 +644,27 @@ def asof_decayed_join(
     ``sum_i v_i * 2^{-(t - t_i)/H}`` over the entity's right rows at
     ``t_i <= t`` — the two-table member of the feature matrix
     (:func:`asof_agg_join` = hard window / two tables,
-    :func:`~..windows.time_decayed_features` = decayed / one table).
+    :func:`~.windows.time_decayed_features` = decayed / one table).
     ``count`` is the decayed event count (fractional), ``mean`` their
     ratio. Leakage-free by construction.
 
-    Numerics + skew (one construction, see ``time_decayed_features``):
-    the decay must factor through the probe row, so contributors carry
-    ``v_i * 2^{t_i/H}`` re-centered on ghost chunks of width
-    ``C = truncate_half_lives * H`` — exponents stay in ``[-T, T)`` and
-    a hot entity is bounded at two chunks per task. The chunking is
+    The decayed two-table form of :func:`~.windows._trailing_frame`:
+    contributor weights are re-centred on ghost chunks of width
+    ``C = truncate_half_lives * H``, so exponents stay in ``[-T, T)``
+    and a hot entity is bounded at two chunks per task. The chunking is
     load-bearing for the exponent range, so each half-life costs one
-    shuffle of |L|+|R| (there is no all-half-lives-one-shuffle variant);
-    contributors ghost via explode, so the right side is scanned once
-    per half-life. Truncation at the default 96 half-lives is below
-    double precision (weight < 2^-96). Null/invalid left timestamps
-    match nothing (count 0, null sums); null-ts or null-value right rows
-    never contribute — the engine-wide as-of convention.
+    shuffle of |L|+|R| (there is no all-half-lives-one-shuffle variant)
+    and one right-side scan. Truncation at the default 96 half-lives is
+    below double precision (weight < 2^-96). Null/invalid left
+    timestamps match nothing (count 0, null sums); null-ts or null-value
+    right rows never contribute — the engine-wide as-of convention.
     """
-    from ..functions.timeutil import epoch_millis
-
-    keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
-    allowed = ("sum", "count", "mean")
-    for s in stats:
-        if s not in allowed:
-            raise ValueError(
-                f"unknown stat '{s}'; choose from {sorted(allowed)}"
-            )
-    if truncate_half_lives < 1:
-        raise ValueError("truncate_half_lives must be >= 1")
-    prefix = prefix or f"{value}_hl"
-    check_output_names(
-        left.columns,
-        [
-            f"{prefix}{horizon_label(h)}_{s}"
-            for h in half_lives_seconds
-            for s in stats
-        ],
+    return _trailing_frame(
+        left, _keys(on), left_ts, value, half_lives_seconds, stats=stats,
+        include_current=include_current, prefix=prefix or f"{value}_hl",
+        right=right, right_ts=right_ts or left_ts, chunked=True,
+        truncate_half_lives=truncate_half_lives,
     )
-    for c in ("__ms", "__is_q", "__chunk", "__e", "__w1", "__wv"):
-        if c in left.columns:
-            raise ValueError(f"left column '{c}' shadows an internal name")
-    for h in half_lives_seconds:
-        if h <= 0:
-            raise ValueError("half-lives must be > 0 seconds")
-    end = 0 if include_current else -1
-
-    rms = epoch_millis(right, right_ts)
-    out = left
-    for h in half_lives_seconds:
-        h_ms = int(round(float(h) * 1000))
-        c_ms = truncate_half_lives * h_ms
-        lms = epoch_millis(out, left_ts)
-        probes = out.select(
-            "*", lms.alias("__ms"), F.lit(1).alias("__is_q")
-        ).withColumn("__chunk", F.floor(F.col("__ms") / F.lit(c_ms)))
-        base = right.filter(
-            rms.isNotNull() & F.col(value).isNotNull()
-        ).select(
-            *[F.col(k) for k in keys],
-            rms.alias("__ms"),
-            F.lit(0).alias("__is_q"),
-            F.col(value).alias("__cv"),
-        )
-        rchunk = F.floor(F.col("__ms") / F.lit(c_ms))
-        # contributor + next-chunk ghost in one right-side pass
-        contribs = base.select(
-            "*",
-            F.explode(F.array(rchunk, rchunk + F.lit(1))).alias("__chunk"),
-        )
-        # re-centered exponent: contributors in [-T, T), probes use their
-        # own chunk so the un-base multiplier exponent is in (-T, 0]
-        e = (F.col("__ms") - F.col("__chunk") * F.lit(c_ms)) / F.lit(
-            float(h_ms)
-        )
-        contribs = contribs.withColumn(
-            "__w1", F.pow(F.lit(2.0), e)
-        ).withColumn("__wv", F.col("__w1") * F.col("__cv")).drop("__cv")
-        # probe rows carry null __w1/__wv -> contribute nothing; null-ms
-        # probes sort into the null peer group (no contributors there:
-        # null-ts right rows were filtered) -> count 0 / null sums
-        both = probes.unionByName(contribs, allowMissingColumns=True)
-        w = (
-            Window.partitionBy(*keys, "__chunk")
-            .orderBy(F.col("__ms"))
-            .rangeBetween(-c_ms, end)
-        )
-        unbase = F.pow(F.lit(2.0), -e)
-        exprs = {
-            "sum": lambda: F.sum("__wv").over(w) * unbase,
-            "count": lambda: F.coalesce(
-                F.sum("__w1").over(w) * unbase, F.lit(0.0)
-            ),
-            "mean": lambda: F.sum("__wv").over(w) / F.sum("__w1").over(w),
-        }
-        both = both.select(
-            "*",
-            *[
-                exprs[s]().alias(f"{prefix}{horizon_label(h)}_{s}")
-                for s in stats
-            ],
-        )
-        out = both.filter(F.col("__is_q") == 1).drop(
-            "__ms", "__is_q", "__chunk", "__w1", "__wv"
-        )
-    return out
 
 
 def snapshot_at(

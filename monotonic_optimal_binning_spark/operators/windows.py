@@ -473,53 +473,19 @@ def multi_horizon_features(
     "activity in the last hour / day / week as of each event" shape,
     leakage-free by construction (nothing after ``t`` is visible).
 
-    Scale design: every horizon shares the SAME window partitioning and
-    ordering, so Catalyst plans one shuffle + one sort and evaluates all
-    the frames in a single Window operator — adding a horizon adds zero
-    shuffles.  ``include_current=False`` ends the frame 1 ms before the
-    event (strictly-prior features, e.g. when ``value`` is an outcome of
-    the event itself).  A pathologically hot entity serializes into one
-    task here — see :func:`multi_horizon_features_bucketed`.
+    Every horizon is a range frame over ONE (entity, epoch-ms) Window —
+    one shuffle and one sort however many horizons (the unchunked
+    partitioning of :func:`_trailing_frame`). ``include_current=False``
+    ends the frame 1 ms before the event (strictly-prior features, e.g.
+    when ``value`` is an outcome of the event itself). An event with a
+    null time contributes nothing and gets count 0 / null sums. A
+    pathologically hot entity serializes into one task here — see
+    :func:`multi_horizon_features_bucketed`.
     """
-    keys = _keys(key)
-    prefix = prefix or f"{value}_h"
-    fns = {"sum": F.sum, "count": F.count, "mean": F.avg,
-           "min": F.min, "max": F.max}
-    for s in stats:
-        if s not in fns:
-            raise ValueError(f"unknown stat '{s}'; choose from {sorted(fns)}")
-    check_output_names(
-        df.columns,
-        [
-            f"{prefix}{horizon_label(h)}_{s}"
-            for h in horizons_seconds
-            for s in stats
-        ],
+    return _trailing_frame(
+        df, _keys(key), ts, value, horizons_seconds, stats=stats,
+        include_current=include_current, prefix=prefix or f"{value}_h",
     )
-    end = 0 if include_current else -1
-    ms = epoch_millis(df, ts)  # exact: no FP at frame boundaries
-    # ALL horizon columns in one projection: sequential withColumn would
-    # leave one physical Window operator per expression (CollapseWindow
-    # can't merge across the interleaved Projects), i.e. one sort per
-    # horizon; a single select groups every frame under ONE Window node
-    # (same partitioning+ordering, frames differ per expression) — plan
-    # shape pinned in tests/test_plans.py
-    new_cols = []
-    for h in horizons_seconds:
-        if h <= 0:
-            raise ValueError("horizons must be > 0 seconds")
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(ms)
-            .rangeBetween(-int(round(float(h) * 1000)), end)
-        )
-        for s in stats:
-            new_cols.append(
-                fns[s](F.col(value))
-                .over(w)
-                .alias(f"{prefix}{horizon_label(h)}_{s}")
-            )
-    return df.select("*", *new_cols)
 
 
 def multi_horizon_features_bucketed(
@@ -534,88 +500,17 @@ def multi_horizon_features_bucketed(
     prefix: Optional[str] = None,
 ) -> DataFrame:
     """Skew-safe :func:`multi_horizon_features`: identical output, but no
-    single task ever holds a hot entity's full history.
-
-    Per horizon ``h``, events are chunked by ``floor(t / h)`` and each
-    event is ALSO emitted as a ghost contributor into the next chunk:
-    the trailing window ``[t - h, t]`` can only reach the current and
-    previous chunk, so a range window over the ``(entity, chunk)``
-    partition — real rows query, ghosts only contribute — reproduces the
-    global result exactly while bounding every task at two chunks of one
-    entity.  Cost: 2x shuffled rows and one shuffle per horizon (the
-    chunking differs per ``h``), the standard price of skew immunity.
+    single task ever holds a hot entity's full history — the chunked
+    partitioning of :func:`_trailing_frame` (per horizon ``h``, chunks of
+    width ``h`` plus next-chunk ghosts). Cost: 2x shuffled rows and one
+    shuffle per horizon (the chunking differs per ``h``), the standard
+    price of skew immunity.
     """
-    keys = _keys(key)
-    prefix = prefix or f"{value}_h"
-    fns = {"sum": F.sum, "count": F.count, "mean": F.avg,
-           "min": F.min, "max": F.max}
-    for s in stats:
-        if s not in fns:
-            raise ValueError(f"unknown stat '{s}'; choose from {sorted(fns)}")
-    for c in ("__ms", "__chunk", "__is_q", "__g"):
-        if c in df.columns:
-            raise ValueError(f"input column '{c}' shadows an internal name")
-    check_output_names(
-        df.columns,
-        [
-            f"{prefix}{horizon_label(h)}_{s}"
-            for h in horizons_seconds
-            for s in stats
-        ],
+    return _trailing_frame(
+        df, _keys(key), ts, value, horizons_seconds, stats=stats,
+        include_current=include_current, prefix=prefix or f"{value}_h",
+        chunked=True,
     )
-    end = 0 if include_current else -1
-    out = df
-    for h in horizons_seconds:
-        if h <= 0:
-            raise ValueError("horizons must be > 0 seconds")
-        h_ms = int(round(float(h) * 1000))
-        ms = epoch_millis(out, ts)  # exact: no FP at frame boundaries
-        base = out.withColumn("__ms", ms)
-        chunk0 = F.floor(F.col("__ms") / F.lit(h_ms))
-        # ghost rows via explode, NOT a self-union: a union embeds the
-        # upstream plan — including every PREVIOUS horizon's Window —
-        # into both branches and re-executes it per branch (2^k blowup
-        # across k horizons: 3 horizons planned 7 Windows / 8 scans).
-        # Generate emits the (chunk, query) and (chunk+1, ghost) copies
-        # in one pass over an upstream computed once.
-        both = base.select(
-            "*",
-            F.explode(
-                F.array(
-                    F.struct(chunk0.alias("c"), F.lit(1).alias("q")),
-                    F.struct(
-                        (chunk0 + F.lit(1)).alias("c"), F.lit(0).alias("q")
-                    ),
-                )
-            ).alias("__g"),
-        ).select(
-            "*",
-            F.col("__g.c").alias("__chunk"),
-            F.col("__g.q").alias("__is_q"),
-        ).drop("__g")
-        w = (
-            Window.partitionBy(*keys, "__chunk")
-            .orderBy("__ms")
-            .rangeBetween(-h_ms, end)
-        )
-        # every row in a partition contributes exactly once: an event's
-        # real copy lives in chunk c and its ghost in c+1, so the two
-        # incarnations never share a partition and nothing double-counts.
-        # One select -> one Window operator per horizon (see the plain
-        # variant's plan note)
-        both = both.select(
-            "*",
-            *[
-                fns[s](F.col(value))
-                .over(w)
-                .alias(f"{prefix}{horizon_label(h)}_{s}")
-                for s in stats
-            ],
-        )
-        out = both.filter(F.col("__is_q") == 1).drop(
-            "__ms", "__chunk", "__is_q"
-        )
-    return out
 
 
 def time_bucket(df: DataFrame, ts: str, seconds: float, out_col: str = "bucket") -> Column:
@@ -682,19 +577,11 @@ def time_decayed_features(
     ``count`` is the decayed event count (weight 1 per non-null value,
     fractional by nature); ``mean`` is decayed sum / decayed count.
 
-    Numerics + scale in ONE construction: a windowed aggregate cannot
-    reference the probe row, so the decay must factor as
-    ``2^{-t/H} * sum(v_i * 2^{t_i/H})`` — whose terms overflow double
-    for any real epoch. Events are therefore chunked by
-    ``C = truncate_half_lives * H`` with each event re-emitted as a
-    ghost contributor into the next chunk (the
-    :func:`multi_horizon_features_bucketed` construction): within a
-    ``(entity, chunk)`` partition every exponent is re-centered on the
-    chunk start and stays in ``[-T, T)`` (default ±96 — far inside
-    double range), and the trailing frame ``[t - C, t]`` never reaches
-    past the previous chunk, so the partition is self-contained. The
-    same chunking bounds any hot entity's task at two chunks — the skew
-    story is free.
+    Computed by the decayed stats of :func:`_trailing_frame`: chunks of
+    width ``C = truncate_half_lives * H`` with next-chunk ghosts, weights
+    re-centred on the chunk start so every exponent stays in ``[-T, T)``
+    (default ±96 — far inside double range); the same chunking bounds any
+    hot entity's task at two chunks.
 
     Truncation is exact to double precision, not an approximation knob:
     a contributor older than ``T = truncate_half_lives`` half-lives
@@ -704,95 +591,198 @@ def time_decayed_features(
     and null values match nothing and contribute nothing (engine-wide
     convention): a null-time probe emits count 0 / null sum.
     """
-    keys = _keys(key)
-    prefix = prefix or f"{value}_hl"
-    allowed = ("sum", "count", "mean")
+    return _trailing_frame(
+        df, _keys(key), ts, value, half_lives_seconds, stats=stats,
+        include_current=include_current, prefix=prefix or f"{value}_hl",
+        chunked=True, truncate_half_lives=truncate_half_lives,
+    )
+
+
+# -- trailing-frame kernel --------------------------------------------------
+
+# columns the kernel adds to the probe side (and drops again)
+_FRAME_INTERNAL = (
+    "__ms", "__v", "__is_q", "__chunk", "__g", "__e", "__w1", "__wv"
+)
+# hard-window stats: one aggregate over the frame's contributed values
+_HARD_STATS = {
+    "sum": F.sum, "count": F.count, "mean": F.avg, "min": F.min, "max": F.max
+}
+# decayed stats from the frame's weighted sum ``sw``, its weight sum
+# ``s1`` and the probe's un-base factor ``u`` (see _trailing_frame)
+_DECAYED_STATS = {
+    "sum": lambda sw, s1, u: sw * u,
+    "count": lambda sw, s1, u: F.coalesce(s1 * u, F.lit(0.0)),
+    "mean": lambda sw, s1, u: sw / s1,
+}
+
+
+def _ghosts(rows: DataFrame, width: int, is_q: int) -> DataFrame:
+    """Each row in its chunk ``floor(ms / width)`` (flagged ``is_q``) plus
+    a ghost copy in the next chunk that only contributes.
+
+    One Generate, NOT a self-union: a union embeds the upstream plan —
+    including every previous span's Window — into both branches and
+    re-executes it per branch (3 spans once planned 7 Windows / 8
+    scans); explode emits both copies in one pass over an upstream
+    computed once, and is a project-collapse barrier besides."""
+    c = F.floor(F.col("__ms") / F.lit(width))
+    copies = F.array(
+        F.struct(c.alias("c"), F.lit(is_q).alias("q")),
+        F.struct((c + F.lit(1)).alias("c"), F.lit(0).alias("q")),
+    )
+    return (
+        rows.select("*", F.explode(copies).alias("__g"))
+        .select("*", F.col("__g.c").alias("__chunk"),
+                F.col("__g.q").alias("__is_q"))
+        .drop("__g")
+    )
+
+
+def _trailing_frame(
+    probes: DataFrame,
+    keys: List[str],
+    ts: str,
+    value: str,
+    spans: Sequence[float],
+    *,
+    stats: Sequence[str],
+    include_current: bool,
+    prefix: str,
+    right: Optional[DataFrame] = None,
+    right_ts: Optional[str] = None,
+    chunked: bool = False,
+    truncate_half_lives: Optional[int] = None,
+) -> DataFrame:
+    """Aggregate ``value`` over each probe row's trailing entity frame
+    ``[t - w, t]`` (``[t - w, t - 1 ms]`` without ``include_current``),
+    one ``{prefix}{span}_{stat}`` column per span and stat — the one
+    implementation behind the six point-in-time aggregation operators.
+    Frame membership is exact on integer epoch milliseconds, and
+    same-millisecond ties are all in (range frames are value-based).
+
+    Three selections, each fixed by the calling operator:
+
+    * Row set. ``right=None``: one table — every row is both a probe and
+      a contributor (no union, no second scan). Otherwise left probes
+      (contributing nothing) are unioned with ``right`` contributor rows.
+    * Partitioning. Unchunked: every span is a range frame over ONE
+      ``(keys, ms)`` Window — one shuffle and one sort for all spans
+      (a single select holds every frame; sequential withColumn would
+      leave one Window per expression, since CollapseWindow cannot merge
+      across the interleaved Projects). Chunked: per span, rows chunk by
+      ``floor(ms / width)`` and every contributor is also ghosted into
+      the next chunk (:func:`_ghosts`); the frame reaches back at most
+      one width, so a ``(keys, chunk)`` partition — probes in their own
+      chunk — sees exactly the global frame while a hot entity is
+      bounded at two chunks per task. One shuffle per span.
+    * Frame stats. ``truncate_half_lives=None``: hard windows of width
+      ``span``, ``sum/count/mean/min/max``. Otherwise decayed
+      ``sum/count/mean`` with half-life ``span`` (chunked only): the
+      frame is ``T = truncate_half_lives`` half-lives wide, and since a
+      windowed aggregate cannot reference the probe row the decay must
+      factor as ``2^{-t/H} * sum(v_i 2^{t_i/H})``; each weight's exponent
+      is re-centred on its row's chunk start so it stays in ``[-T, T)``,
+      and the probe's own un-base factor restores
+      ``v_i 2^{(t_i - t)/H}`` exactly.
+
+    Null rule: a row whose event time is null contributes nothing, and a
+    null-time probe gets count 0 and null sums (it sorts into the null
+    peer group, where nothing contributes); null values never contribute.
+    """
+    decayed = truncate_half_lives is not None
+    fns = _DECAYED_STATS if decayed else _HARD_STATS
     for s in stats:
-        if s not in allowed:
-            raise ValueError(f"unknown stat '{s}'; choose from {sorted(allowed)}")
-    if truncate_half_lives < 1:
+        if s not in fns:
+            raise ValueError(f"unknown stat '{s}'; choose from {sorted(fns)}")
+    if decayed and truncate_half_lives < 1:
         raise ValueError("truncate_half_lives must be >= 1")
-    for c in ("__ms", "__chunk", "__is_q", "__e", "__wv", "__w1", "__g"):
-        if c in df.columns:
+    for c in _FRAME_INTERNAL:
+        if c in probes.columns:
             raise ValueError(f"input column '{c}' shadows an internal name")
     check_output_names(
-        df.columns,
-        [
-            f"{prefix}{horizon_label(h)}_{s}"
-            for h in half_lives_seconds
-            for s in stats
-        ],
+        probes.columns,
+        [f"{prefix}{horizon_label(h)}_{s}" for h in spans for s in stats],
     )
+    if any(h <= 0 for h in spans):
+        kind = "half-lives" if decayed else "horizons"
+        raise ValueError(f"{kind} must be > 0 seconds")
     end = 0 if include_current else -1
-    out = df
-    for h in half_lives_seconds:
-        if h <= 0:
-            raise ValueError("half-lives must be > 0 seconds")
+
+    def widths(h):
         h_ms = int(round(float(h) * 1000))
-        c_ms = truncate_half_lives * h_ms
-        ms = epoch_millis(out, ts)  # exact: no FP at frame boundaries
-        base = out.withColumn("__ms", ms)
-        chunk0 = F.floor(F.col("__ms") / F.lit(c_ms))
-        # ghost rows via explode, NOT a self-union: a union would embed
-        # the upstream plan (including every previous half-life's Window)
-        # into BOTH branches and re-execute it per branch; Generate emits
-        # the (chunk, is_query) and (chunk+1, is_ghost) copies in one
-        # pass over an upstream computed once — and is a project-collapse
-        # barrier, so the weight exprs below aren't re-inlined either
-        both = base.select(
-            "*",
-            F.explode(
-                F.array(
-                    F.struct(chunk0.alias("c"), F.lit(1).alias("q")),
-                    F.struct(
-                        (chunk0 + F.lit(1)).alias("c"), F.lit(0).alias("q")
-                    ),
-                )
-            ).alias("__g"),
-        ).select(
-            "*",
-            F.col("__g.c").alias("__chunk"),
-            F.col("__g.q").alias("__is_q"),
-        ).drop("__g")
-        # exponent re-centered on the row's own chunk start: real rows
-        # in [0, T), ghosts in [-T, 0) — pow(2, .) never leaves double
-        e = (F.col("__ms") - F.col("__chunk") * F.lit(c_ms)) / F.lit(
-            float(h_ms)
-        )
-        contrib_ok = F.col("__ms").isNotNull() & F.col(value).isNotNull()
-        both = (
-            both.withColumn("__e", e)
-            .withColumn(
-                "__w1",
-                F.when(contrib_ok, F.pow(F.lit(2.0), F.col("__e"))),
+        return h_ms, truncate_half_lives * h_ms if decayed else h_ms
+
+    def frame_rows(out: DataFrame, h=None) -> DataFrame:
+        """Probe + contributor rows: ``__ms`` (exact epoch ms), ``__v``
+        (the value a row contributes, null for none), ``__is_q`` (probe
+        flag, absent when every row is a probe), ``__chunk`` per span h."""
+        ms = epoch_millis(out, ts).alias("__ms")
+        width = None if h is None else widths(h)[1]
+        if right is None:
+            rows = out.select("*", ms).withColumn(
+                "__v", F.when(F.col("__ms").isNotNull(), F.col(value))
             )
-            .withColumn("__wv", F.col("__w1") * F.col(value))
-        )
-        w = (
-            Window.partitionBy(*keys, "__chunk")
-            .orderBy("__ms")
-            .rangeBetween(-c_ms, end)
-        )
-        # all stats in one select -> ONE Window operator per half-life
-        # (see multi_horizon_features' CollapseWindow note); the probe's
-        # own 2^-e undoes the re-centering, so sum terms are exactly
-        # v_i * 2^{(t_i - t)/H}
-        unbase = F.pow(F.lit(2.0), -F.col("__e"))
-        exprs = {
-            "sum": lambda: F.sum("__wv").over(w) * unbase,
-            "count": lambda: F.coalesce(
-                F.sum("__w1").over(w) * unbase, F.lit(0.0)
-            ),
-            "mean": lambda: F.sum("__wv").over(w) / F.sum("__w1").over(w),
-        }
-        both = both.select(
-            "*",
-            *[
-                exprs[s]().alias(f"{prefix}{horizon_label(h)}_{s}")
-                for s in stats
-            ],
-        )
-        out = both.filter(F.col("__is_q") == 1).drop(
-            "__ms", "__chunk", "__is_q", "__e", "__w1", "__wv"
-        )
+            if width is not None:
+                rows = _ghosts(rows, width, 1)
+        else:
+            contrib = right.select(
+                *keys,
+                epoch_millis(right, right_ts).alias("__ms"),
+                F.col(value).alias("__v"),
+            ).filter(F.col("__ms").isNotNull() & F.col("__v").isNotNull())
+            probe = out.select("*", ms, F.lit(1).alias("__is_q"))
+            if width is None:
+                contrib = contrib.withColumn("__is_q", F.lit(0))
+            else:
+                probe = probe.withColumn(
+                    "__chunk", F.floor(F.col("__ms") / F.lit(width))
+                )
+                contrib = _ghosts(contrib, width, 0)
+            rows = probe.unionByName(contrib, allowMissingColumns=True)
+        if decayed:
+            h_ms = widths(h)[0]
+            rows = (
+                rows.withColumn(
+                    "__e",
+                    (F.col("__ms") - F.col("__chunk") * F.lit(width))
+                    / F.lit(float(h_ms)),
+                )
+                .withColumn(
+                    "__w1",
+                    F.when(F.col("__v").isNotNull(),
+                           F.pow(F.lit(2.0), F.col("__e"))),
+                )
+                .withColumn("__wv", F.col("__w1") * F.col("__v"))
+            )
+        return rows
+
+    def frame(rows: DataFrame, part: List[str], hs) -> DataFrame:
+        cols = []
+        for h in hs:
+            w = (
+                Window.partitionBy(*part)
+                .orderBy("__ms")
+                .rangeBetween(-widths(h)[1], end)
+            )
+            for s in stats:
+                if decayed:
+                    agg = fns[s](
+                        F.sum("__wv").over(w),
+                        F.sum("__w1").over(w),
+                        F.pow(F.lit(2.0), -F.col("__e")),
+                    )
+                else:
+                    agg = fns[s](F.col("__v")).over(w)
+                cols.append(agg.alias(f"{prefix}{horizon_label(h)}_{s}"))
+        out = rows.select("*", *cols)
+        if "__is_q" in rows.columns:
+            out = out.filter(F.col("__is_q") == 1)
+        return out.drop(*_FRAME_INTERNAL)
+
+    if not chunked:
+        return frame(frame_rows(probes), keys, spans)
+    out = probes
+    for h in spans:
+        out = frame(frame_rows(out, h), [*keys, "__chunk"], [h])
     return out

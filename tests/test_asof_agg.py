@@ -171,6 +171,9 @@ def test_left_equals_right_matches_multi_horizon(spark):
             "v": rng.uniform(0, 5, n).round(2),
         }
     )
+    # null event times and null values on both sides of the self-probe
+    pdf.loc[rng.choice(n, 10, replace=False), "ts"] = np.nan
+    pdf.loc[rng.choice(n, 10, replace=False), "v"] = np.nan
     df = spark.createDataFrame(pdf)
     a = (
         asof_agg_join(

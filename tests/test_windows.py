@@ -359,6 +359,11 @@ def test_multi_horizon_bucketed_equals_plain(spark):
             "v": rng.uniform(0, 10, n).round(2),
         }
     )
+    # null event times (several on the hot entity) and null values: a
+    # null-time event contributes nothing and gets count 0 / null sums
+    null_ts = rng.choice(n, 12, replace=False)
+    pdf.loc[null_ts, "ts"] = np.nan
+    pdf.loc[rng.choice(n, 12, replace=False), "v"] = np.nan
     df = spark.createDataFrame(pdf).repartition(8)
     horizons = [45.0, 700.0, 12.5]
     stats = ("sum", "count", "mean", "min", "max")
@@ -380,6 +385,8 @@ def test_multi_horizon_bucketed_equals_plain(spark):
         pd.testing.assert_frame_equal(
             bucketed[plain.columns], plain, check_dtype=False
         )
+        assert (plain.loc[null_ts, "v_h45_count"] == 0).all()
+        assert plain.loc[null_ts, "v_h45_sum"].isna().all()
 
 
 def test_horizon_label_fractional_and_guards(spark):
