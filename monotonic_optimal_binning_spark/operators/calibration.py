@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import artifacts
 from ..core.pava import GroupStats, fit_pava
+from ..exceptions import DataError
 from ..functions.lookup import dispatch, name, serve_sql, step_sql, tabulate
 from .evaluation import _bucketize
 
@@ -278,6 +279,13 @@ def _iso_fit(
         if weight_col is not None and not r["n"] > 0:
             continue  # zero-weight-only score group carries no mass
         per_group.setdefault(r["__g"] if keys else None, []).append(r)
+    if not keys and not per_group[None]:
+        raise DataError(
+            f"{where}: empty input — no row with a non-null, non-NaN "
+            f"'{score_col}' and '{y_col}'"
+            + (f" and a positive '{weight_col}'" if weight_col else "")
+            + " to fit"
+        )
     return {
         gv: _solve_iso(
             sorted(grows, key=lambda r: r["__s"]), score_col,

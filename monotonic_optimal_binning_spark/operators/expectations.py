@@ -40,11 +40,12 @@ not violated) and ``row_count`` 0.
 
 from __future__ import annotations
 
-import json
 from dataclasses import asdict, dataclass, field
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
+
+from .. import artifacts
 
 _RATIO_KINDS = ("not_null", "in_set", "between", "regex", "unique")
 _STATS = {
@@ -328,10 +329,8 @@ def referential_check(
 
 
 def save_suite(expectations: Sequence[Expectation], path: str) -> None:
-    with open(path, "w") as f:
-        json.dump([e.to_dict() for e in expectations], f, indent=2)
+    artifacts.save_json([e.to_dict() for e in expectations], path)
 
 
 def load_suite(path: str) -> List[Expectation]:
-    with open(path) as f:
-        return [Expectation.from_dict(d) for d in json.load(f)]
+    return [Expectation.from_dict(d) for d in artifacts.load_json(path)]

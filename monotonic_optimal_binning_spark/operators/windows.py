@@ -718,7 +718,7 @@ def _trailing_frame(
         (the value a row contributes, null for none), ``__is_q`` (probe
         flag, absent when every row is a probe), ``__chunk`` per span h."""
         ms = epoch_millis(out, ts).alias("__ms")
-        width = None if h is None else widths(h)[1]
+        h_ms, width = (None, None) if h is None else widths(h)
         if right is None:
             rows = out.select("*", ms).withColumn(
                 "__v", F.when(F.col("__ms").isNotNull(), F.col(value))
@@ -741,7 +741,6 @@ def _trailing_frame(
                 contrib = _ghosts(contrib, width, 0)
             rows = probe.unionByName(contrib, allowMissingColumns=True)
         if decayed:
-            h_ms = widths(h)[0]
             rows = (
                 rows.withColumn(
                     "__e",

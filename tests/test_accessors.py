@@ -1,6 +1,9 @@
 """Reference API-surface accessors: pava_groups_/pava_blocks_, config JSON,
 embedding near-dup dedup."""
 
+import json
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -41,6 +44,18 @@ def test_config_json_roundtrip(tmp_path):
     cfg = EngineConfig(epsilon=1e-10, default_prebins=64)
     p = str(tmp_path / "cfg.json")
     cfg.to_json(p)
+    assert EngineConfig.from_json(p) == cfg
+    assert not os.path.exists(p + ".tmp")
+    # a file written before max_iterations/shuffle_partitions were retired
+    # (nothing read them) still loads; the retired keys are ignored
+    old = str(tmp_path / "old_cfg.json")
+    with open(old, "w") as f:
+        json.dump({"epsilon": 1e-10, "max_iterations": 1000,
+                   "default_prebins": 64, "shuffle_partitions": 32}, f,
+                  indent=2)
+    assert EngineConfig.from_json(old) == cfg
+    with pytest.raises(ValueError):
+        EngineConfig(epsilon=float("nan")).to_json(p)
     assert EngineConfig.from_json(p) == cfg
 
 

@@ -466,14 +466,16 @@ def test_single_fit_equals_one_group_fit(many_scores, kw):
 
 
 def test_isotonic_empty_input(many_scores):
-    """No clean row: the single fit raises (PAVA has no group to pool);
-    the grouped fit has no group to fit."""
+    """No clean row: the single fit raises a DataError naming the empty
+    input and the caller; the grouped fit has no group to fit."""
     from monotonic_optimal_binning_spark.exceptions import DataError
     from monotonic_optimal_binning_spark.operators.calibration import (
         isotonic_calibrate_grouped,
     )
 
     empty = many_scores.limit(0)
-    with pytest.raises(DataError, match="No groups"):
+    with pytest.raises(
+        DataError, match="isotonic_calibrate: empty input"
+    ):
         isotonic_calibrate(empty, "score", "y")
     assert isotonic_calibrate_grouped(empty, "score", "y", "k").models == {}
