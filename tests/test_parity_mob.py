@@ -32,6 +32,7 @@ def make_continuous_frame(n=500, seed=42):
 
 
 def ref_binner(pdf, **kwargs):
+    pytest.importorskip("MOBPY")
     from MOBPY import BinningConstraints as RefConstraints
     from MOBPY.binning.mob import MonotonicBinner
 
@@ -106,9 +107,9 @@ class TestBinaryParity:
     def test_decreasing_sign(self, spark):
         pdf = make_binary_frame(500)
         pdf["y"] = 1 - pdf["y"]
-        ref = ref_binner(pdf)
         eng = spark_binner(spark, pdf)
         assert eng.resolved_sign_ == "-"
+        ref = ref_binner(pdf)
         assert_full_parity(ref, eng)
 
     def test_explicit_signs(self, spark):
@@ -121,9 +122,9 @@ class TestBinaryParity:
     def test_with_missing(self, spark):
         pdf = make_binary_frame(500)
         pdf.loc[pdf.sample(frac=0.02, random_state=1).index, "x"] = np.nan
-        ref = ref_binner(pdf)
         eng = spark_binner(spark, pdf)
         assert "Missing" in eng.summary_()["bucket"].tolist()
+        ref = ref_binner(pdf)
         assert_full_parity(ref, eng)
 
     def test_with_excluded(self, spark):
@@ -132,10 +133,10 @@ class TestBinaryParity:
         pdf.loc[idx[: len(idx) // 2], "x"] = -999.0
         pdf.loc[idx[len(idx) // 2 :], "x"] = -888.0
         kw = {"exclude_values": [-999.0, -888.0]}
-        ref = ref_binner(pdf, **kw)
         eng = spark_binner(spark, pdf, **kw)
         buckets = eng.summary_()["bucket"].tolist()
         assert "Excluded:-999.0" in buckets and "Excluded:-888.0" in buckets
+        ref = ref_binner(pdf, **kw)
         assert_full_parity(ref, eng)
 
     def test_missing_and_excluded_combined(self, spark):
@@ -206,9 +207,9 @@ class TestBinaryParity:
 class TestContinuousParity:
     def test_continuous_target(self, spark):
         pdf = make_continuous_frame(500)
-        ref = ref_binner(pdf)
         eng = spark_binner(spark, pdf)
         assert "woe" not in eng.summary_().columns
+        ref = ref_binner(pdf)
         assert_full_parity(ref, eng)
 
     def test_continuous_with_missing(self, spark):
@@ -220,18 +221,18 @@ class TestContinuousParity:
 class TestEdgeCases:
     def test_single_unique_x(self, spark):
         pdf = pd.DataFrame({"x": np.ones(100), "y": np.r_[np.zeros(50), np.ones(50)]})
-        ref = ref_binner(pdf)
         eng = spark_binner(spark, pdf)
         assert len(eng.bins_()) == 1
+        ref = ref_binner(pdf)
         assert_full_parity(ref, eng)
 
     def test_perfect_separation(self, spark):
         pdf = pd.DataFrame(
             {"x": np.arange(100, dtype=float), "y": np.r_[np.zeros(50), np.ones(50)]}
         )
-        ref = ref_binner(pdf)
         eng = spark_binner(spark, pdf)
         assert len(eng.bins_()) >= 2
+        ref = ref_binner(pdf)
         assert_full_parity(ref, eng)
 
     def test_empty_clean_raises(self, spark):
