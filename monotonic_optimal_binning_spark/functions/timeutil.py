@@ -35,7 +35,9 @@ def epoch_millis(df: DataFrame, col: str) -> Column:
     ``(double_seconds * 1000).cast(long)`` truncates an FP product whose
     error sign depends on the value: two engines computing it can
     disagree by 1 ms at frame boundaries). Numeric columns (already
-    seconds) keep the double path — they carry no hidden precision.
+    seconds) keep the double path — they carry no hidden precision — and
+    a NaN time is NULL, like a null one (``floor(NaN * 1000)`` cast to
+    long would be a finite millisecond).
     """
     dtype = df.schema[col].dataType
     c = F.col(col)
@@ -47,7 +49,8 @@ def epoch_millis(df: DataFrame, col: str) -> Column:
     # floor, not cast-truncation: a negative fractional epoch second
     # (pre-1970) must land in the same millisecond as the equivalent
     # timestamp column, or range-frame membership shifts by 1 ms
-    return F.floor(c.cast("double") * 1000).cast("long")
+    d = c.cast("double")
+    return F.when(~F.isnan(d), F.floor(d * 1000)).cast("long")
 
 
 def pin_utc(spark) -> None:

@@ -18,10 +18,16 @@ Catalyst keeps every expression in whole-stage codegen — no Python in the
 hot path. Tie-breaking on the ``side`` column gives exact
 allow_exact_matches semantics without a range self-join blowup.
 
+Step 2 is :func:`~.windows.backfill` over the tagged union (an as-of
+``backward`` is a forward fill, ``forward`` a backward fill), so the join
+and the fill share one window plan.
+
 Skew: a single hot key serializes into one task. Mitigations (documented,
 benchmarked in BENCH.md): enable AQE skew handling for the shuffle, or
-pre-bucket time into coarse ranges and run the union-window per
-(key, time_bucket) with boundary carry-in — see ``asof_join_bucketed``.
+``asof_join_bucketed``: the same union filled with
+:func:`~.windows.backfill_bucketed`, which windows per (key, time_bucket)
+and carries the newest right value across buckets over a one-row-per-
+bucket summary that re-enters the union as one carry row per bucket.
 """
 
 from __future__ import annotations
@@ -32,10 +38,116 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.timeutil import epoch_seconds as _ts_expr
-from .windows import _keys, _trailing_frame
+from .windows import _backfill_bucketed, _keys, _trailing_frame, backfill
 
 _SIDE = "__asof_side"
 _MATCH_TS = "__asof_matched_ts"
+
+
+def _asof_names(left, right, on, left_ts, right_ts, value_cols, right_prefix):
+    """The preamble of every as-of form: ``(keys, right_ts, value_cols,
+    out_names)``, with ``right_ts`` defaulting to ``left_ts``, the value
+    columns to every right column but the keys and time, and an output
+    name that collides with a left column refused."""
+    keys = _keys(on)
+    right_ts = right_ts or left_ts
+    if value_cols is None:
+        value_cols = [
+            c for c in right.columns if c not in keys and c != right_ts
+        ]
+    out_names = [right_prefix + c for c in value_cols]
+    for c in out_names:
+        if c in left.columns:
+            raise ValueError(
+                f"output column '{c}' collides with a left column; set "
+                f"right_prefix"
+            )
+    return keys, right_ts, value_cols, out_names
+
+
+def _asof_fill(
+    left, right, on, left_ts, right_ts, value_cols, right_prefix, *,
+    backward: bool, allow_exact_matches: bool,
+    bucket_seconds: Optional[float] = None,
+):
+    """The as-of join as a fill over the tagged union: ``(left rows with
+    the matched values, _MATCH_TS, _SIDE and __asof_ts, out_names)``.
+
+    Left and right rows are unioned by (key, ts) and the right values are
+    filled onto the left rows with :func:`~.windows.backfill` (or
+    :func:`~.windows.backfill_bucketed` when ``bucket_seconds`` is given):
+    an as-of ``backward`` is a backfill ``forward``, and the reverse.
+    """
+    keys, right_ts, value_cols, out_names = _asof_names(
+        left, right, on, left_ts, right_ts, value_cols, right_prefix
+    )
+    # Side ordering encodes exact-match eligibility:
+    #   backward + exact:  right rows sort BEFORE left at equal ts
+    #   backward + !exact: right rows sort AFTER  left at equal ts
+    # (mirrored for forward, where the fill looks at following rows)
+    if backward:
+        right_side, left_side = (0, 1) if allow_exact_matches else (1, 0)
+    else:
+        right_side, left_side = (1, 0) if allow_exact_matches else (0, 1)
+
+    # value columns keep their NATIVE right-side types (string/struct/array
+    # payloads survive; pandas merge_asof parity) — only the left side's
+    # null placeholders are cast, to the right schema's type
+    lsel = [F.col(c) for c in left.columns]
+    lsel += [
+        F.lit(None).cast(right.schema[c].dataType).alias(p)
+        for c, p in zip(value_cols, out_names)
+    ]
+    lsel += [
+        F.lit(left_side).alias(_SIDE),
+        _ts_expr(left, left_ts).alias("__asof_ts"),
+        F.lit(None).cast("double").alias(_MATCH_TS),
+    ]
+    l_tagged = left.select(*lsel)
+
+    rsel = [F.col(k) for k in keys]
+    rsel += [
+        F.lit(None).cast(left.schema[c].dataType).alias(c)
+        for c in left.columns
+        if c not in keys
+    ]
+    rsel += [F.col(c).alias(p) for c, p in zip(value_cols, out_names)]
+    rsel += [
+        F.lit(right_side).alias(_SIDE),
+        _ts_expr(right, right_ts).alias("__asof_ts"),
+        _ts_expr(right, right_ts).alias(_MATCH_TS),
+    ]
+    # a right row with a NULL event time can never be "before" or "after"
+    # anything — without this filter it sorts NULLS FIRST and its values
+    # leak into every backward match
+    r_tagged = right.select(*rsel).filter(F.col("__asof_ts").isNotNull())
+
+    unioned = l_tagged.unionByName(r_tagged)
+    fill_cols = out_names + [_MATCH_TS]
+    if bucket_seconds is None:
+        filled = backfill(
+            unioned, fill_cols, keys, "__asof_ts",
+            direction="forward" if backward else "backward",
+            output_suffix="", tiebreak=[_SIDE],
+        )
+    else:
+        # only right rows hold values, all on one side and none with a
+        # null time, so the time alone orders each bucket's summary
+        filled = _backfill_bucketed(
+            unioned, fill_cols, keys, "__asof_ts", bucket_seconds, "",
+            [_SIDE], F.col("__asof_ts"),
+        )
+    result = filled.filter(F.col(_SIDE) == F.lit(left_side))
+
+    # a left row with a NULL event time matches nothing (it would
+    # otherwise sort NULLS FIRST and, in forward mode, grab the earliest
+    # right value)
+    null_ts = F.col("__asof_ts").isNull()
+    for c in fill_cols:
+        result = result.withColumn(
+            c, F.when(null_ts, F.lit(None)).otherwise(F.col(c))
+        )
+    return result, out_names
 
 
 def asof_join(
@@ -75,99 +187,13 @@ def asof_join(
     would leak a null-ts right row into every backward match and hand
     forward-mode null-ts left rows the earliest right value.
     """
-    keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
-    if value_cols is None:
-        value_cols = [
-            c for c in right.columns if c not in keys and c != right_ts
-        ]
-    out_names = [right_prefix + c for c in value_cols]
-    for c in out_names:
-        if c in left.columns:
-            raise ValueError(
-                f"output column '{c}' collides with a left column; set "
-                f"right_prefix"
-            )
-
-    backward = direction == "backward"
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction}")
-
-    # Side ordering encodes exact-match eligibility:
-    #   backward + exact:  right rows sort BEFORE left at equal ts
-    #   backward + !exact: right rows sort AFTER  left at equal ts
-    # (mirrored for forward, where the frame looks at following rows)
-    if backward:
-        right_side, left_side = (0, 1) if allow_exact_matches else (1, 0)
-    else:
-        right_side, left_side = (1, 0) if allow_exact_matches else (0, 1)
-
-    # value columns keep their NATIVE right-side types (string/struct/array
-    # payloads survive; pandas merge_asof parity) — only the left side's
-    # null placeholders are cast, to the right schema's type
-    lsel = [F.col(c) for c in left.columns]
-    lsel += [
-        F.lit(None).cast(right.schema[c].dataType).alias(p)
-        for c, p in zip(value_cols, out_names)
-    ]
-    lsel += [
-        F.lit(left_side).alias(_SIDE),
-        _ts_expr(left, left_ts).alias("__asof_ts"),
-        F.lit(None).cast("double").alias(_MATCH_TS),
-    ]
-    l_tagged = left.select(*lsel)
-
-    rsel = [F.col(k) for k in keys]
-    rsel += [
-        F.lit(None).cast(left.schema[c].dataType).alias(c)
-        for c in left.columns
-        if c not in keys
-    ]
-    rsel += [F.col(c).alias(p) for c, p in zip(value_cols, out_names)]
-    rsel += [
-        F.lit(right_side).alias(_SIDE),
-        _ts_expr(right, right_ts).alias("__asof_ts"),
-        _ts_expr(right, right_ts).alias(_MATCH_TS),
-    ]
-    # a right row with a NULL event time can never be "before" or "after"
-    # anything — without this filter it sorts NULLS FIRST and its values
-    # leak into every backward match
-    r_tagged = right.select(*rsel).filter(F.col("__asof_ts").isNotNull())
-
-    unioned = l_tagged.unionByName(r_tagged)
-
-    order = [F.col("__asof_ts"), F.col(_SIDE)]
-    if backward:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        fill = lambda c: F.last(c, ignorenulls=True).over(w)  # noqa: E731
-    else:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(*order)
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        fill = lambda c: F.first(c, ignorenulls=True).over(w)  # noqa: E731
-
-    filled = unioned
-    for c in out_names:
-        filled = filled.withColumn(c, fill(c))
-    filled = filled.withColumn(_MATCH_TS, fill(_MATCH_TS))
-
-    is_left_row = F.col(_SIDE) == F.lit(left_side)
-    result = filled.filter(is_left_row)
-
-    # a left row with a NULL event time matches nothing (it would
-    # otherwise sort NULLS FIRST and, in forward mode, grab the earliest
-    # right value)
-    null_ts = F.col("__asof_ts").isNull()
-    for c in out_names + [_MATCH_TS]:
-        result = result.withColumn(
-            c, F.when(null_ts, F.lit(None)).otherwise(F.col(c))
-        )
+    result, out_names = _asof_fill(
+        left, right, on, left_ts, right_ts, value_cols, right_prefix,
+        backward=direction == "backward",
+        allow_exact_matches=allow_exact_matches,
+    )
 
     if tolerance is not None:
         too_far = (
@@ -241,19 +267,9 @@ def asof_join_broadcast(
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
-    if value_cols is None:
-        value_cols = [
-            c for c in right.columns if c not in keys and c != right_ts
-        ]
-    out_names = [right_prefix + c for c in value_cols]
-    for c in out_names:
-        if c in left.columns:
-            raise ValueError(
-                f"output column '{c}' collides with a left column; set "
-                f"right_prefix"
-            )
+    keys, right_ts, value_cols, out_names = _asof_names(
+        left, right, on, left_ts, right_ts, value_cols, right_prefix
+    )
 
     # the collect itself is BOUNDED by limit(max_rows + 1): a runaway
     # right side materializes at most max_rows+1 rows on the driver before
@@ -445,115 +461,30 @@ def asof_join_bucketed(
     allow_exact_matches: bool = True,
     right_prefix: str = "",
 ) -> DataFrame:
-    """Skew-resistant backward as-of join for hot keys.
+    """Skew-resistant backward as-of join for hot keys: the same rows as
+    :func:`asof_join` (backward, no tolerance).
 
-    Splits time into ``bucket_seconds`` ranges so one hot key parallelizes
-    across (key, bucket) tasks instead of serializing into one window task.
-    Right rows are replicated into their own bucket AND the next bucket's
-    carry-in (only the latest right row per (key, bucket) is carried, which
-    is all a backward as-of can ever need), then the union-window plan runs
-    per (key, bucket).
+    The same tagged union as :func:`asof_join`, filled with
+    :func:`~.windows.backfill_bucketed` instead of
+    :func:`~.windows.backfill`: time splits into ``bucket_seconds``
+    ranges, so one hot key parallelizes across (key, bucket) tasks
+    instead of serializing into one window task. The newest non-null
+    right value of the preceding buckets carries over the one-row-per-
+    bucket summary, so a left row whose match is many (empty) buckets
+    older still finds it; equal timestamps share a bucket, so the
+    exact-match tie rule holds inside it.
 
-    Trade-off vs :func:`asof_join`: one extra pre-aggregation of the right
-    side (tiny: one row per key×bucket) and a denser shuffle key. A left row
-    whose true match is older than one full bucket still finds it because
-    carry-ins chain through the right-side pre-aggregation below.
+    Trade-off vs :func:`asof_join`: the union still shuffles once (on
+    (key, bucket) instead of key, with one carry row per bucket), plus a
+    second read of both inputs for the map-side summary (one row per
+    key×bucket) and one shuffle of that summary per key. No join.
     """
-    keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in keys and c != right_ts]
-
-    bucket = lambda ts_col: F.floor(ts_col / F.lit(float(bucket_seconds)))  # noqa: E731
-
-    r_ts = _ts_expr(right, right_ts)
-    r_base = right.select(
-        *[F.col(k) for k in keys],
-        r_ts.alias("__ts"),
-        bucket(r_ts).alias("__bkt"),
-        *[F.col(c) for c in value_cols],
+    result, _ = _asof_fill(
+        left, right, on, left_ts, right_ts, value_cols, right_prefix,
+        backward=True, allow_exact_matches=allow_exact_matches,
+        bucket_seconds=bucket_seconds,
     )
-
-    l_ts = _ts_expr(left, left_ts)
-    l_bkt = left.withColumn("__ts", l_ts).withColumn("__bkt", bucket(F.col("__ts")))
-
-    # Carry-in computation on a TINY table: one row per (key, bucket) that
-    # appears on either side. For every bucket containing left rows, find the
-    # latest right payload from any STRICTLY earlier bucket (same-bucket
-    # matches are handled by the in-bucket window). Equal timestamps always
-    # land in the same bucket, so carried rows can never violate the
-    # exact-match tie rule.
-    latest = r_base.groupBy(*keys, "__bkt").agg(
-        F.max("__ts").alias("__ts"),
-        *[F.expr(f"max_by(`{c}`, __ts)").alias(c) for c in value_cols],
-    )
-    left_buckets = l_bkt.select(*keys, "__bkt").distinct()
-    skeleton = left_buckets.join(latest, on=[*keys, "__bkt"], how="full")
-    wprev = (
-        Window.partitionBy(*keys)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carried = (
-        skeleton.select(
-            *keys,
-            F.col("__bkt"),
-            F.last("__ts", ignorenulls=True).over(wprev).alias("__ts"),
-            *[
-                F.last(c, ignorenulls=True).over(wprev).alias(c)
-                for c in value_cols
-            ],
-        )
-        .join(left_buckets, on=[*keys, "__bkt"], how="leftsemi")
-        .filter(F.col("__ts").isNotNull())
-    )
-
-    r_union = r_base.unionByName(carried)
-
-    return _bucketed_union_window(
-        l_bkt, r_union, keys, value_cols, allow_exact_matches, right_prefix
-    )
-
-
-def _bucketed_union_window(
-    l_bkt: DataFrame,
-    r_union: DataFrame,
-    keys: List[str],
-    value_cols: List[str],
-    allow_exact_matches: bool,
-    right_prefix: str,
-) -> DataFrame:
-    out_names = [right_prefix + c for c in value_cols]
-    right_side, left_side = (0, 1) if allow_exact_matches else (1, 0)
-
-    lsel = [F.col(c) for c in l_bkt.columns if c not in ("__ts", "__bkt")]
-    lsel += [
-        F.lit(None).cast(r_union.schema[c].dataType).alias(p)
-        for c, p in zip(value_cols, out_names)
-    ]
-    lsel += [F.lit(left_side).alias(_SIDE), F.col("__ts"), F.col("__bkt")]
-    l_tagged = l_bkt.select(*lsel)
-
-    rsel = [F.col(k) for k in keys]
-    rsel += [
-        F.lit(None).cast(l_bkt.schema[c].dataType).alias(c)
-        for c in l_bkt.columns
-        if c not in keys and c not in ("__ts", "__bkt")
-    ]
-    rsel += [F.col(c).alias(p) for c, p in zip(value_cols, out_names)]
-    rsel += [F.lit(right_side).alias(_SIDE), F.col("__ts"), F.col("__bkt")]
-    r_tagged = r_union.select(*rsel)
-
-    unioned = l_tagged.unionByName(r_tagged)
-    w = (
-        Window.partitionBy(*keys, "__bkt")
-        .orderBy("__ts", _SIDE)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned
-    for c in out_names:
-        filled = filled.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return filled.filter(F.col(_SIDE) == left_side).drop(_SIDE, "__ts", "__bkt")
+    return result.drop(_SIDE, "__asof_ts", _MATCH_TS)
 
 
 def asof_agg_join(

@@ -101,10 +101,14 @@ def expect_in_set(column: str, values: Sequence, min_ratio: float = 1.0,
                        min_ratio=float(min_ratio))
 
 
-def expect_between(column: str, lo: float, hi: float,
+def expect_between(column: str, lo: float = None, hi: float = None,
                    min_ratio: float = 1.0, name: str = None):
+    """Share of non-null values in ``[lo, hi]``; ``None`` leaves that side
+    open (as in :func:`expect_row_count` / :func:`expect_stat`)."""
     return Expectation("between", name or f"between({column})",
-                       column=column, lo=float(lo), hi=float(hi),
+                       column=column,
+                       lo=None if lo is None else float(lo),
+                       hi=None if hi is None else float(hi),
                        min_ratio=float(min_ratio))
 
 
@@ -194,11 +198,12 @@ def run_checks(
             aggs.append(F.count(F.when(c.isin(e.values), 1)).alias(f"__m{i}"))
             aggs.append(F.count(c).alias(f"__d{i}"))
         elif e.kind == "between":
-            aggs.append(
-                F.count(
-                    F.when(c.between(F.lit(e.lo), F.lit(e.hi)), 1)
-                ).alias(f"__m{i}")
-            )
+            inside = c.isNotNull()  # the share is of non-null values
+            if e.lo is not None:
+                inside = inside & (c >= F.lit(e.lo))
+            if e.hi is not None:
+                inside = inside & (c <= F.lit(e.hi))
+            aggs.append(F.count(F.when(inside, 1)).alias(f"__m{i}"))
             aggs.append(F.count(c).alias(f"__d{i}"))
         elif e.kind == "regex":
             aggs.append(F.count(F.when(c.rlike(e.pattern), 1)).alias(f"__m{i}"))

@@ -59,6 +59,68 @@ def _order_cols(ts: str, tiebreak: Sequence[str]):
     return [ts, *tiebreak]
 
 
+_B, _G, _PK = "__b", "__g", "__pk"
+
+
+def _bucket_stitch(
+    df: DataFrame,
+    key: str | Sequence[str],
+    ts: str,
+    bucket_seconds: float,
+    tiebreak: Sequence[str],
+):
+    """The one stitch of the ``*_bucketed`` twins: ``(rows, local, across)``.
+
+    ``rows`` is ``df`` plus its time bucket ``__b`` and ``__g = 1``.
+    ``local`` windows rows per (key, bucket) in ``(__g, ts, *tiebreak)``
+    order, so a hot key spreads over its buckets; ``across`` windows the
+    one-row-per-bucket summaries per key in bucket order. A twin carries
+    values across buckets over the summaries and hands them back to each
+    bucket as carry rows (:func:`_with_carry`), which ``__g`` sorts before
+    (0) or after (2) the bucket's own rows: the local window then reads
+    the carry as if the neighbouring bucket's rows were there. No join:
+    the window's partitioning is null-safe on the keys, and the rows
+    shuffle once.
+
+    The bucket of a time is ``floor(t / bucket_seconds)``, a null time
+    the lowest long and a NaN time the highest, so buckets in order with
+    rows in order inside each are exactly the plain window's NULLS FIRST
+    / NaN-last order.
+    """
+    if bucket_seconds <= 0:
+        raise ValueError("bucket_seconds must be positive")
+    keys = _keys(key)
+    t = epoch_seconds(df, ts)
+    bucket = (
+        F.when(t.isNull(), F.lit(-(2**63)))
+        .when(F.isnan(t), F.lit(2**63 - 1))
+        .otherwise(F.floor(t / F.lit(float(bucket_seconds))))
+    )
+    rows = df.withColumn(_B, bucket).withColumn(_G, F.lit(1))
+    local = Window.partitionBy(*keys, _B).orderBy(
+        _G, *_order_cols(ts, tiebreak)
+    )
+    across = Window.partitionBy(*keys).orderBy(_B)
+    return rows, local, across
+
+
+def _order_key(ts: str, tiebreak: Sequence[str]) -> Column:
+    """The local window's order as one value, for ``max_by``/``min_by``
+    over a bucket (struct order is NULLS FIRST, NaN last, as the window's)."""
+    return F.struct(*[F.col(o) for o in _order_cols(ts, tiebreak)])
+
+
+def _with_carry(rows: DataFrame, carry: DataFrame) -> DataFrame:
+    """``rows`` plus the carry rows: ``carry`` holds the keys, ``__b``,
+    ``__g`` (0 sorts before the bucket's rows, 2 after) and the carried
+    columns; the rows' other columns are null on it."""
+    return rows.unionByName(carry, allowMissingColumns=True)
+
+
+def _drop_carry(out: DataFrame) -> DataFrame:
+    return out.filter(F.col(_G) == 1).drop(_B, _G)
+
+
 def with_lag_lead(
     df: DataFrame,
     cols: Sequence[str],
@@ -93,62 +155,38 @@ def with_lag_lead_bucketed(
     for the per-entity serial window (same decision rule as the other
     ``*_bucketed`` variants).
 
-    Plan: lag/lead locally inside (key, time-bucket) partitions; each
-    bucket's FIRST and LAST row values (min_by/max_by over the order key —
-    one summary row per bucket) provide the boundary carry: a bucket's
-    first row takes the previous bucket's last value as its lag, its last
-    row takes the next bucket's first value as its lead. Only lag 1 /
-    lead 1 are supported — deeper offsets would need k boundary rows
-    carried per bucket; use the plain window for those.
+    Plan (the :func:`_bucket_stitch` shape): lag/lead locally inside
+    (key, time-bucket) partitions; each bucket's first and last values
+    (``min_by``/``max_by`` over the order key, one summary row per bucket)
+    come back as two carry rows: before the bucket, the previous bucket's
+    last value (the lag of its first row); after it, the next bucket's
+    first value (the lead of its last row). Only lag 1 / lead 1 are
+    supported — deeper offsets would need k boundary rows carried per
+    bucket; use the plain window for those.
     """
-    if bucket_seconds <= 0:
-        raise ValueError("bucket_seconds must be positive")
+    rows, local, across = _bucket_stitch(df, key, ts, bucket_seconds, tiebreak)
     keys = _keys(key)
-    order = _order_cols(ts, tiebreak)
-    tsd = epoch_seconds(df, ts)
-    work = df.withColumn(
-        "__b", F.floor(tsd / F.lit(float(bucket_seconds))).cast("long")
+    o = _order_key(ts, tiebreak)
+    summ = rows.groupBy(*keys, _B).agg(
+        *[F.max_by(c, o).alias(f"__last_{c}") for c in cols],
+        *[F.min_by(c, o).alias(f"__first_{c}") for c in cols],
     )
-    w1 = Window.partitionBy(*keys, "__b").orderBy(*order)
-    okey = F.struct(*[F.col(o) for o in order])
-    for c in cols:
-        work = work.withColumn(f"__lag_{c}", F.lag(c).over(w1)).withColumn(
-            f"__lead_{c}", F.lead(c).over(w1)
-        )
-    work = work.withColumn("__rn", F.row_number().over(w1)).withColumn(
-        "__rn_max", F.count(F.lit(1)).over(Window.partitionBy(*keys, "__b"))
-    )
-
-    summ = work.groupBy(*keys, "__b").agg(
-        *[F.max_by(F.col(c), okey).alias(f"__last_{c}") for c in cols],
-        *[F.min_by(F.col(c), okey).alias(f"__first_{c}") for c in cols],
-    )
-    w2 = Window.partitionBy(*keys).orderBy("__b")
+    # one summary pass feeds both carry rows of a bucket
     carry = summ.select(
         *keys,
-        "__b",
-        *[F.lag(f"__last_{c}").over(w2).alias(f"__prev_{c}") for c in cols],
-        *[F.lead(f"__first_{c}").over(w2).alias(f"__next_{c}") for c in cols],
-    )
-    out = work.join(carry, on=[*keys, "__b"])
+        _B,
+        *[F.lag(f"__last_{c}").over(across).alias(f"__prev_{c}") for c in cols],
+        *[F.lead(f"__first_{c}").over(across).alias(f"__next_{c}") for c in cols],
+    ).select(*keys, _B, F.inline(F.array(*[
+        F.struct(F.lit(g).alias(_G), *[F.col(f"{p}{c}").alias(c) for c in cols])
+        for g, p in ((0, "__prev_"), (2, "__next_"))
+    ])))
+    out = _with_carry(rows, carry)
     for c in cols:
-        out = (
-            out.withColumn(
-                f"{c}_lag1",
-                F.when(F.col("__rn") == 1, F.col(f"__prev_{c}")).otherwise(
-                    F.col(f"__lag_{c}")
-                ),
-            )
-            .withColumn(
-                f"{c}_lead1",
-                F.when(
-                    F.col("__rn") == F.col("__rn_max"), F.col(f"__next_{c}")
-                ).otherwise(F.col(f"__lead_{c}")),
-            )
-            .drop(f"__lag_{c}", f"__lead_{c}", f"__prev_{c}", f"__next_{c}",
-                  f"__last_{c}", f"__first_{c}")
+        out = out.withColumn(f"{c}_lag1", F.lag(c).over(local)).withColumn(
+            f"{c}_lead1", F.lead(c).over(local)
         )
-    return out.drop("__b", "__rn", "__rn_max")
+    return _drop_carry(out)
 
 
 def backfill(
@@ -203,63 +241,50 @@ def backfill_bucketed(
     :func:`backfill` (forward direction), without the per-entity serial
     window a hot key would funnel into one task.
 
-    Plan: fill LOCALLY inside (key, time-bucket) partitions; each bucket's
-    LAST non-null value per column (a ``max_by`` over the bucket — ignores
-    rows whose ordering key is nulled out) forms a one-row-per-bucket
-    summary; a window over the tiny summary carries the most recent
-    non-null value across PRECEDING buckets, and rows whose local fill is
-    still null coalesce with their bucket's carry-in. Same stitching
-    pattern as :func:`sessionize_bucketed` / ``asof_join_bucketed``.
-    """
-    if bucket_seconds <= 0:
-        raise ValueError("bucket_seconds must be positive")
-    keys = _keys(key)
-    order = _order_cols(ts, tiebreak)
-    tsd = epoch_seconds(df, ts)
-    work = df.withColumn(
-        "__b", F.floor(tsd / F.lit(float(bucket_seconds))).cast("long")
-    )
-    w1 = (
-        Window.partitionBy(*keys, "__b")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    for c in cols:
-        work = work.withColumn(
-            f"__local_{c}", F.last(c, ignorenulls=True).over(w1)
-        )
+    Plan (the :func:`_bucket_stitch` shape): fill LOCALLY inside
+    (key, time-bucket) partitions; a one-row-per-bucket summary holds each
+    bucket's last non-null value per column (``max_by`` over the order
+    key, null values skipped), a window over those summaries carries the
+    most recent non-null value of the PRECEDING buckets, and that comes
+    back as a carry row before each bucket, where the local fill picks it
+    up. ``asof_join_bucketed`` is this fill over the as-of tagged union.
 
-    # bucket's last non-null value per col: max_by with the ordering key
-    # nulled out for null values (max_by skips null ordering keys)
-    okey = F.struct(*[F.col(o) for o in order])
-    summ = work.groupBy(*keys, "__b").agg(
-        *[
-            F.max_by(F.col(c), F.when(F.col(c).isNotNull(), okey)).alias(
-                f"__last_{c}"
-            )
-            for c in cols
-        ]
+    Trade-off vs :func:`backfill`: the fill is no longer one serial task
+    per key, for a second read of the input (its map-side summary) and
+    one shuffle of the summary per key (the rows, with one carry row per
+    bucket, still shuffle once, on (key, bucket)).
+    """
+    return _backfill_bucketed(
+        df, cols, key, ts, bucket_seconds, output_suffix, tiebreak,
+        _order_key(ts, tiebreak),
     )
-    w2 = (
-        Window.partitionBy(*keys)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = summ.select(
-        *keys,
-        "__b",
-        *[
-            F.last(f"__last_{c}", ignorenulls=True).over(w2).alias(f"__carry_{c}")
-            for c in cols
-        ],
-    )
-    out = work.join(carry, on=[*keys, "__b"])
+
+
+def _backfill_bucketed(
+    df, cols, key, ts, bucket_seconds, output_suffix, tiebreak, last_by
+) -> DataFrame:
+    """:func:`backfill_bucketed` with ``last_by``, the order that picks a
+    bucket's last non-null value. A primitive order keeps that summary a
+    hash aggregate; a struct one makes it sort every row before the
+    shuffle (on the PLANS.md §2 skew input, 4M right rows, the as-of join
+    took 10.0 s with the struct and 7.3 s with its time alone)."""
+    rows, local, across = _bucket_stitch(df, key, ts, bucket_seconds, tiebreak)
+    keys = _keys(key)
+    summ = rows.groupBy(*keys, _B).agg(*[
+        F.max_by(c, F.when(F.col(c).isNotNull(), last_by)).alias(c)
+        for c in cols
+    ])
+    before = across.rowsBetween(Window.unboundedPreceding, -1)
+    out = _with_carry(rows, summ.select(
+        *keys, _B, F.lit(0).alias(_G),
+        *[F.last(c, ignorenulls=True).over(before).alias(c) for c in cols],
+    ))
+    upto = local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     for c in cols:
         out = out.withColumn(
-            c + output_suffix,
-            F.coalesce(F.col(f"__local_{c}"), F.col(f"__carry_{c}")),
-        ).drop(f"__local_{c}", f"__carry_{c}")
-    return out.drop("__b")
+            c + output_suffix, F.last(c, ignorenulls=True).over(upto)
+        )
+    return _drop_carry(out)
 
 
 def sessionize(
@@ -331,77 +356,90 @@ def sessionize_bucketed(
     no per-entity serial window — the fix for a hot key whose event stream
     is too large for one task's sort.
 
-    Plan: events are sessionized LOCALLY inside (key, time-bucket)
-    partitions (parallel across a hot key's buckets); a per-(key, bucket)
-    summary — first/last ts and local session count, ONE row per bucket —
-    is stitched with a window over the tiny summary table: a bucket's
-    first local session merges with the previous bucket's last session
-    when the boundary gap is within ``gap_seconds``, and the cumulative
-    (sessions so far − merges so far) gives each bucket's global id
-    offset. Session starts come from a map-side-combinable groupBy on the
-    final (key, session) key — finer than the per-key window the plain
-    version sorts on, so the hot key's work stays spread out.
+    Plan (:func:`_bucket_stitch`'s buckets, with a join in place of carry
+    rows, as the summary needs the local window): events are sessionized
+    LOCALLY inside (key, time-bucket) partitions (parallel across a hot
+    key's buckets), each row carrying its local session's start as
+    :func:`sessionize` does. A bucket's last row holds its first/last
+    time, local session count and last session's start; over those
+    summary rows a bucket's first local session merges with the previous
+    bucket's last session when the boundary gap is within
+    ``gap_seconds``, the cumulative (sessions so far − merges so far)
+    gives each bucket's global id offset, and a merged session takes the
+    start of the session it continues (chained through buckets that are
+    one merged session throughout). One join of the carry back on
+    (key, bucket) finishes both.
 
     Any ``bucket_seconds`` > 0 is correct (merge logic compares adjacent
     EXISTING buckets, so buckets smaller than the gap still chain); choose
     it so one bucket's events fit a task comfortably.
     """
-    if bucket_seconds <= 0:
-        raise ValueError("bucket_seconds must be positive")
-    keys = _keys(key)
-    order = _order_cols(ts, tiebreak)
-    tsd = epoch_seconds(df, ts)
-    work = df.withColumn("__tsd", tsd).withColumn(
-        "__b", F.floor(F.col("__tsd") / F.lit(float(bucket_seconds))).cast("long")
+    rows, _, across = _bucket_stitch(df, key, ts, bucket_seconds, tiebreak)
+    # its summary needs the local window's results, so the carry joins
+    # back; a struct of (keys, bucket) is both the rows' partition and the
+    # join key, as struct equality is null-safe on its fields (eqNullSafe
+    # on separate columns re-shuffles the full rows)
+    rows = rows.withColumn(_PK, F.struct(*_keys(key), _B))
+    local = Window.partitionBy(_PK).orderBy(*_order_cols(ts, tiebreak))
+    gap = F.lit(float(gap_seconds))
+    tsd = F.col("__tsd")
+    upto = local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    prev = F.lag(tsd).over(local)
+    rows = rows.withColumn("__tsd", epoch_seconds(df, ts)).withColumn(
+        "__is_new", F.when(prev.isNull() | ((tsd - prev) > gap), 1).otherwise(0)
     )
-    w1 = Window.partitionBy(*keys, "__b").orderBy(*order)
-    prev = F.lag("__tsd").over(w1)
-    is_new = F.when(
-        prev.isNull()
-        | ((F.col("__tsd") - prev) > F.lit(float(gap_seconds))),
-        1,
-    ).otherwise(0)
-    wrun1 = (
-        Window.partitionBy(*keys, "__b")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    rows = (
+        rows.withColumn("__lsid", F.sum("__is_new").over(upto) - 1)
+        .withColumn(
+            "__lstart",
+            F.last(
+                F.when(F.col("__is_new") == 1, F.struct(F.col(ts).alias("t"))),
+                ignorenulls=True,
+            ).over(upto),
+        )
+        .withColumn("__first", F.first(tsd).over(upto))
+        .withColumn("__end", F.lead(F.lit(1)).over(local).isNull())
     )
-    work = work.withColumn("__is_new", is_new).withColumn(
-        "__lsid", F.sum("__is_new").over(wrun1) - 1
+    upto_b = across.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    before = across.rowsBetween(Window.unboundedPreceding, -1)
+    prev_last = F.lag(tsd).over(across)
+    n_sess = F.col("__lsid") + 1
+    merged = F.col("__merge") == 1
+    carry = (
+        rows.filter("__end")
+        .withColumn(
+            "__merge",
+            F.when(
+                prev_last.isNotNull() & ((F.col("__first") - prev_last) <= gap), 1
+            ).otherwise(0),
+        )
+        .select(
+            _PK,
+            "__merge",
+            (
+                F.sum(n_sess).over(upto_b) - n_sess - F.sum("__merge").over(upto_b)
+            ).alias("__off"),
+            # the start of the session the previous bucket ends in: a
+            # bucket that is one merged session throughout passes on the
+            # start it was handed
+            F.last(
+                F.when(~(merged & (n_sess == 1)), F.col("__lstart")),
+                ignorenulls=True,
+            ).over(before).alias("__carry_start"),
+        )
     )
-
-    summ = work.groupBy(*keys, "__b").agg(
-        F.min("__tsd").alias("__first"),
-        F.max("__tsd").alias("__last"),
-        (F.max("__lsid") + 1).alias("__n_sess"),
-    )
-    w2 = Window.partitionBy(*keys).orderBy("__b")
-    prev_last = F.lag("__last").over(w2)
-    merge = F.when(
-        prev_last.isNotNull()
-        & ((F.col("__first") - prev_last) <= F.lit(float(gap_seconds))),
-        1,
-    ).otherwise(0)
-    wrun2 = (
-        Window.partitionBy(*keys)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offs = summ.withColumn("__merge", merge).withColumn(
-        "__off",
-        F.sum("__n_sess").over(wrun2)
-        - F.col("__n_sess")
-        - F.sum("__merge").over(wrun2),
-    )
-    out = work.join(offs.select(*keys, "__b", "__off"), on=[*keys, "__b"])
+    out = rows.join(carry, _PK)
+    continues = merged & (F.col("__lsid") == 0)
     out = out.withColumn(
         session_col, (F.col("__lsid") + F.col("__off")).cast("long")
+    ).withColumn(
+        f"{session_col}_start",
+        F.when(continues, F.col("__carry_start")).otherwise(F.col("__lstart"))["t"],
     )
-    starts = out.groupBy(*keys, session_col).agg(
-        F.min(ts).alias(f"{session_col}_start")
+    return out.drop(
+        _PK, _B, _G, "__tsd", "__is_new", "__lsid", "__lstart", "__first",
+        "__end", "__merge", "__off", "__carry_start",
     )
-    out = out.join(starts, on=[*keys, session_col])
-    return out.drop("__tsd", "__b", "__is_new", "__lsid", "__off")
 
 
 def rolling_stats(

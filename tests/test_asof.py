@@ -112,17 +112,44 @@ def test_zero_temporal_leakage(spark):
 
 
 def test_bucketed_matches_plain(spark):
+    """asof_join_bucketed returns asof_join's rows, in count and value
+    (compared Spark-side: toPandas() folds NULL and NaN together), on
+    null and NaN event times on both sides, null keys, null right values
+    (the newest right row of an earlier bucket among them: plain skips
+    it for the older non-null value), and exact ties under both
+    allow_exact_matches values, for buckets below and above the event
+    spacing."""
+    nan = float("nan")
     left, right = make_frames(seed=11)
-    sl, sr = spark.createDataFrame(left), spark.createDataFrame(right)
-    plain = asof_join(sl, sr, on="k", left_ts="ts", value_cols=["v"])
-    bucketed = asof_join_bucketed(
-        sl, sr, on="k", left_ts="ts", value_cols=["v"], bucket_seconds=50.0
-    )
-    p = plain.toPandas().sort_values(["k", "ts", "payload"]).reset_index(drop=True)
-    b = bucketed.toPandas().sort_values(["k", "ts", "payload"]).reset_index(drop=True)
-    np.testing.assert_allclose(
-        p["v"].to_numpy(float), b["v"].to_numpy(float), rtol=1e-12, equal_nan=True
-    )
+    left.loc[:30, "ts"] = right.loc[:30, "ts"].to_numpy()   # exact ties
+    left.loc[:30, "k"] = right.loc[:30, "k"].to_numpy()
+    right.loc[right.index % 5 == 0, "v"] = None
+    lrows = left.astype(object).values.tolist() + [
+        (1, None, 0.5), (None, 500.0, 0.25), (101, nan, 0.75),
+        (100, 60.0, 0.125),
+    ]
+    rrows = right.astype(object).where(right.notna(), None).values.tolist() + [
+        (1, None, 99.0), (None, 400.0, 3.0), (101, nan, 8.0),
+        (101, 20.0, 6.0), (100, 10.0, 5.0), (100, 40.0, None),
+    ]
+    sl = spark.createDataFrame(lrows, "k long, ts double, payload double")
+    sr = spark.createDataFrame(rrows, "k long, ts double, v double")
+    for exact in (True, False):
+        plain = asof_join(
+            sl, sr, on="k", left_ts="ts", value_cols=["v"],
+            allow_exact_matches=exact,
+        )
+        assert plain.filter("k = 100").first()["v"] == 5.0
+        for bucket in (50.0, 5000.0):
+            bucketed = asof_join_bucketed(
+                sl, sr, on="k", left_ts="ts", value_cols=["v"],
+                bucket_seconds=bucket, allow_exact_matches=exact,
+            )
+            label = (exact, bucket)
+            assert bucketed.columns == plain.columns, label
+            assert bucketed.count() == plain.count() == len(lrows), label
+            assert bucketed.exceptAll(plain).count() == 0, label
+            assert plain.exceptAll(bucketed).count() == 0, label
 
 
 def test_bucketed_carry_across_many_empty_buckets(spark):
@@ -140,16 +167,25 @@ def test_bucketed_carry_across_many_empty_buckets(spark):
     assert res["v"].tolist() == [42.0, 42.0]
 
 
-def test_column_collision_raises(spark):
+@pytest.mark.parametrize(
+    "join", ["asof_join", "asof_join_bucketed", "asof_join_broadcast"]
+)
+def test_column_collision_raises(spark, join):
+    """Every as-of form refuses an output name that collides with a left
+    column (the preamble they share)."""
+    from monotonic_optimal_binning_spark.operators import asof
+
     left, right = make_frames()
     right = right.rename(columns={"v": "payload"})
+    kw = {"bucket_seconds": 50.0} if join == "asof_join_bucketed" else {}
     with pytest.raises(ValueError, match="collides"):
-        asof_join(
+        getattr(asof, join)(
             spark.createDataFrame(left),
             spark.createDataFrame(right),
             on="k",
             left_ts="ts",
             value_cols=["payload"],
+            **kw,
         )
 
 

@@ -177,6 +177,12 @@ def test_suite_round_trip(tmp_path, table):
         expect_unique(["id", "code"], exact=False),
         expect_row_count(lo=10),
         expect_stat("v", "stddev", hi=100),
+        # one-sided ranges: an open bound is None, not an infinite float
+        # strict JSON could not save
+        expect_between("v", lo=90, min_ratio=0.0, name="v>=90"),
+        expect_between("v", hi=9, min_ratio=0.0, name="v<=9"),
+        # no bound at all: every non-null value is inside, NULLs are not
+        expect_between("code", min_ratio=0.0, name="code any"),
     ]
     p = str(tmp_path / "suite.json")
     save_suite(exps, p)
@@ -185,6 +191,10 @@ def test_suite_round_trip(tmp_path, table):
     a = run_checks(table, exps).collect()
     b = run_checks(table, loaded).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    got = _by_name(b)
+    assert got["v>=90"]["observed"] == 0.1
+    assert got["v<=9"]["observed"] == 0.1
+    assert got["code any"]["observed"] == 1.0
 
 
 def test_expect_job_end_to_end(spark, tmp_path):

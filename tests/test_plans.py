@@ -54,6 +54,10 @@ def test_asof_join_single_exchange_and_pushdown(spark):
     # ONE shuffle of |L|+|R| (the window partitioning) — the documented
     # lower bound; a join-based rewrite would show 2+
     assert count_exchanges(out) == 1, plan
+    # the fill over the tagged union is one sort and one Window node
+    simple = plan_of(out, "simple")
+    assert len(re.findall(r"(?<![A-Za-z])Sort\b", simple)) == 1, simple
+    assert len(re.findall(r"(?<![A-Za-z])Window\b", simple)) == 1, simple
     # both side filters reach the parquet scans
     assert plan.count("PushedFilters: [IsNotNull(event_type)") >= 2 or (
         "EqualTo(event_type,click)" in plan
@@ -459,6 +463,92 @@ def test_sessionize_single_exchange(spark):
     out = sessionize(ev, "user_id", "ts", gap_seconds=1800.0,
                      tiebreak=["event_id"])
     assert count_exchanges(out) == 1
+
+
+def _raw_row_windows_by(plan: str, key: str) -> int:
+    """Window nodes of a simple plan partitioned by ``key`` alone whose
+    input is raw rows: beneath them (past other windows by ``key``) comes
+    a scan, or a differently partitioned Window with no Filter in between
+    — not an aggregate or the bucket-end Filter over a (key, bucket)
+    Window of the ``*_bucketed`` stitch."""
+    def by_key(line):
+        m = re.search(r"Window \[.*\], \[([^\[\]]*)\], \[[^\[\]]*\]$", line)
+        return m and re.fullmatch(rf"{key}#\d+L?", m.group(1))
+
+    lines = plan.splitlines()
+    n = 0
+    for i, ln in enumerate(lines):
+        if not by_key(ln):
+            continue
+        filtered = False
+        for below in lines[i + 1:]:
+            if re.search(r"- \w*Aggregate\b", below):
+                break
+            filtered = filtered or bool(re.search(r"- Filter\b", below))
+            other = bool(re.search(r"- Window \[", below)) and not by_key(below)
+            if other or re.search(r"- (File)?Scan\b", below):
+                n += not (other and filtered)
+                break
+    return n
+
+
+def test_bucketed_twins_window_per_bucket(spark):
+    """The skew-safe twins share one stitch: raw rows are windowed per
+    (key, time bucket) and only the one-row-per-bucket summaries are
+    windowed by the key alone, so a hot key still spreads over its
+    buckets. Exchange counts are the stitch's (at most the ones each twin
+    planned before it was shared: 3 / 3 / 7 / 5 on this input). The carry
+    comes back as carry rows in the rows' one shuffle, so only
+    sessionize, whose summary needs the local window, joins. The plain
+    twins keep their one raw-row window by the key."""
+    from monotonic_optimal_binning_spark.functions.timeutil import (
+        epoch_seconds,
+        pin_utc,
+    )
+    from monotonic_optimal_binning_spark.operators.asof import (
+        asof_join_bucketed,
+    )
+    from monotonic_optimal_binning_spark.operators.windows import (
+        backfill,
+        backfill_bucketed,
+        sessionize_bucketed,
+        with_lag_lead_bucketed,
+    )
+
+    pin_utc(spark)
+    ev = spark.read.parquet(os.path.join(SF, "events.parquet"))
+    left = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", epoch_seconds(ev, "ts").alias("ts")
+    )
+    right = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", epoch_seconds(ev, "ts").alias("ts"), "value"
+    )
+    twins = {
+        "lag_lead": (with_lag_lead_bucketed(
+            ev, ["value"], "user_id", "ts", 3600.0, tiebreak=["event_id"]
+        ), 3, 0),
+        "backfill": (backfill_bucketed(
+            ev, ["value"], "user_id", "ts", 3600.0, tiebreak=["event_id"]
+        ), 3, 0),
+        "sessionize": (sessionize_bucketed(
+            ev, "user_id", "ts", 1800.0, 3600.0, tiebreak=["event_id"]
+        ), 3, 1),
+        "asof": (asof_join_bucketed(
+            left, right, on="user_id", left_ts="ts", value_cols=["value"],
+            bucket_seconds=3600.0,
+        ), 3, 0),
+    }
+    for name, (out, exchanges, joins) in twins.items():
+        plan = plan_of(out, "simple")
+        assert count_exchanges(out) == exchanges, (name, plan)
+        assert len(re.findall(r"Join\b", plan)) == joins, (name, plan)
+        assert _raw_row_windows_by(plan, "user_id") == 0, (name, plan)
+        assert "__b" in plan, (name, plan)
+    plain = backfill(ev, ["value"], "user_id", "ts", tiebreak=["event_id"])
+    assert _raw_row_windows_by(plan_of(plain, "simple"), "user_id") == 1
+    assert _raw_row_windows_by(plan_of(asof_join(
+        left, right, on="user_id", left_ts="ts", value_cols=["value"]
+    ), "simple"), "user_id") == 1
 
 
 def test_source_overlap_single_posting_pipeline(spark):

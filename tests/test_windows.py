@@ -161,6 +161,28 @@ def test_time_bucket(spark):
     assert [r["bucket"] for r in res] == [0, 0, 1, 2]
 
 
+NAN = float("nan")
+
+
+def _with_edges(spark, pdf, edges):
+    """``pdf``'s rows plus ``edges`` as a Spark frame with an explicit
+    schema: ``float('nan')`` stays NaN here (a pandas NaN sent through
+    Arrow arrives as NULL) and ``None`` stays NULL."""
+    types = {"eid": "long", "user": "long", "ts": "double", "v": "double"}
+    schema = ", ".join(f"{c} {types[c]}" for c in pdf.columns)
+    rows = pdf.astype(object).where(pdf.notna(), None).values.tolist()
+    return spark.createDataFrame(rows + edges, schema)
+
+
+def _assert_same_rows(got, want, label):
+    """Same row count and the same rows (all columns), compared
+    Spark-side (NULL and NaN stay apart; ``toPandas()`` folds them
+    together)."""
+    assert got.count() == want.count(), label
+    assert got.exceptAll(want).count() == 0, label
+    assert want.exceptAll(got).count() == 0, label
+
+
 def test_sessionize_bucketed_equals_plain(spark):
     """The skew-resistant bucketed sessionize must reproduce the plain
     per-key window's session ids and starts exactly, for bucket sizes both
@@ -179,26 +201,20 @@ def test_sessionize_bucketed_equals_plain(spark):
             "ts": np.round(np.sort(rng.uniform(0, 40_000, n)), 3),
         }
     )
-    df = spark.createDataFrame(pdf)
-    plain = (
-        sessionize(df, "user", "ts", gap_seconds=120.0, tiebreak=["eid"])
-        .select("eid", "session_id", "session_id_start")
-        .toPandas()
-        .set_index("eid")
-    )
+    # null times, NaN times and a null key: NULLS FIRST / NaN-last
+    # singleton sessions, and a null key is a key of its own
+    df = _with_edges(spark, pdf, [
+        (n, 1, None), (n + 1, 1, None), (n + 2, 2, NAN), (n + 3, 2, NAN),
+        (n + 4, None, 100.0), (n + 5, None, 150.0), (n + 6, None, None),
+    ])
+    plain = sessionize(df, "user", "ts", gap_seconds=120.0, tiebreak=["eid"])
     for bucket in (60.0, 900.0):
-        got = (
-            sessionize_bucketed(
-                df, "user", "ts", gap_seconds=120.0,
-                bucket_seconds=bucket, tiebreak=["eid"],
-            )
-            .select("eid", "session_id", "session_id_start")
-            .toPandas()
-            .set_index("eid")
-            .loc[plain.index]
+        got = sessionize_bucketed(
+            df, "user", "ts", gap_seconds=120.0,
+            bucket_seconds=bucket, tiebreak=["eid"],
         )
-        assert got["session_id"].tolist() == plain["session_id"].tolist(), bucket
-        assert got["session_id_start"].tolist() == plain["session_id_start"].tolist(), bucket
+        assert got.columns == plain.columns, bucket
+        _assert_same_rows(got, plain, bucket)
 
 
 def test_backfill_bucketed_equals_plain(spark):
@@ -221,20 +237,18 @@ def test_backfill_bucketed_equals_plain(spark):
             "v": vals,
         }
     )
-    df = spark.createDataFrame(pdf)
-    plain = (
-        backfill(df, ["v"], "user", "ts", tiebreak=["eid"])
-        .select("eid", "v_filled").toPandas().set_index("eid").sort_index()
-    )
+    df = _with_edges(spark, pdf, [
+        (n, 1, None, 5.0), (n + 1, 1, None, None), (n + 2, 2, NAN, 7.0),
+        (n + 3, 2, NAN, None), (n + 4, None, 10.0, 3.0),
+        (n + 5, None, 20.0, None), (n + 6, None, None, 1.0),
+    ])
+    plain = backfill(df, ["v"], "user", "ts", tiebreak=["eid"])
     for bucket in (50.0, 5000.0):
-        got = (
-            backfill_bucketed(
-                df, ["v"], "user", "ts", bucket_seconds=bucket,
-                tiebreak=["eid"],
-            )
-            .select("eid", "v_filled").toPandas().set_index("eid").sort_index()
+        got = backfill_bucketed(
+            df, ["v"], "user", "ts", bucket_seconds=bucket, tiebreak=["eid"],
         )
-        pd.testing.assert_frame_equal(got, plain), bucket
+        assert got.columns == plain.columns, bucket
+        _assert_same_rows(got, plain, bucket)
 
 
 def test_lag_lead_bucketed_equals_plain(spark):
@@ -253,19 +267,20 @@ def test_lag_lead_bucketed_equals_plain(spark):
             "v": rng.uniform(0, 100, n).round(2),
         }
     )
-    df = spark.createDataFrame(pdf)
-    plain = (
-        with_lag_lead(df, ["v"], "user", "ts", lags=[1], leads=[1], tiebreak=["eid"])
-        .select("eid", "v_lag1", "v_lead1").toPandas().set_index("eid").sort_index()
+    df = _with_edges(spark, pdf, [
+        (n, 1, None, 5.0), (n + 1, 1, None, 6.0), (n + 2, 2, NAN, 7.0),
+        (n + 3, 2, NAN, 8.0), (n + 4, None, 10.0, 3.0),
+        (n + 5, None, 20.0, 4.0), (n + 6, None, None, 1.0),
+    ])
+    plain = with_lag_lead(
+        df, ["v"], "user", "ts", lags=[1], leads=[1], tiebreak=["eid"]
     )
     for bucket in (40.0, 4000.0):
-        got = (
-            with_lag_lead_bucketed(
-                df, ["v"], "user", "ts", bucket_seconds=bucket, tiebreak=["eid"]
-            )
-            .select("eid", "v_lag1", "v_lead1").toPandas().set_index("eid").sort_index()
+        got = with_lag_lead_bucketed(
+            df, ["v"], "user", "ts", bucket_seconds=bucket, tiebreak=["eid"]
         )
-        pd.testing.assert_frame_equal(got, plain), bucket
+        assert got.columns == plain.columns, bucket
+        _assert_same_rows(got, plain, bucket)
 
 
 def _ties(rng, ts, frac=0.1):
@@ -387,6 +402,20 @@ def test_multi_horizon_bucketed_equals_plain(spark):
         )
         assert (plain.loc[null_ts, "v_h45_count"] == 0).all()
         assert plain.loc[null_ts, "v_h45_sum"].isna().all()
+    # a NaN time is a null time: it contributes nothing and gets count 0 /
+    # null sums (explicit schema: a pandas NaN would arrive as NULL)
+    nan_df = spark.createDataFrame(
+        [(0, 1, 100.0, 1.0), (1, 1, float("nan"), 4.0),
+         (2, 1, float("nan"), 8.0)],
+        "eid long, user long, ts double, v double",
+    )
+    got = {
+        r["eid"]: (r["v_h3600_count"], r["v_h3600_sum"])
+        for r in multi_horizon_features(
+            nan_df, "user", "ts", "v", [3600.0]
+        ).collect()
+    }
+    assert got == {0: (1, 1.0), 1: (0, None), 2: (0, None)}, got
 
 
 def test_horizon_label_fractional_and_guards(spark):
